@@ -29,25 +29,11 @@ import time
 #         predicates, equality-tested); on a spec hit the separate
 #         violations scan disappears entirely — one table read total.
 #         Miss/unsupported falls back to the rev-5 flow.
-# rev 7 = incremental spill watcher: the background integrity reduce's
-#         parquet decode is prepaid DURING the scan by a driver tail
-#         thread (validate.IncrementalSpillWatcher) — rev 6 removed the
-#         stages the reduce used to hide behind, exposing 1.6-8 s of
-#         integrity_wait at both parallelism levels in paired rounds.
-# rev 8 = watcher's incremental ch-merge replaced by ONE finalize radix
-#         sort: rev 7's insertion-merge was O(n²/batch) — 5-7 s of
-#         prepaid memory-bus traffic during the scan plus a 1.75 s
-#         serial tail fold; numpy stable (LSD radix) sort of the
-#         concatenated chunks is ~0.2 s at 5M hashes.
-# rev 9 = finalize made allocation-free: rev 8's concat+radix allocated
-#         ~80 MB fresh AT finalize, and this host's fault-servicing
-#         degradation (100x, invisible to bandwidth probes that pass at
-#         3 GB/s moments later) turned that 0.2 s into 5-10 s of
-#         integrity_wait in half the paired rounds. The watcher now
-#         copies chunks into a growing pre-faulted buffer DURING the
-#         scan and finalize runs one in-place introsort (~0.07-0.35 s
-#         in every host state).
-ENGINE_REV = 9
+# rev 7-9 = driver-side tail reads of spilled integrity partials (removed
+#         in rev 10).
+# rev 10 = integrity partials return with each fused task's result as
+#         Arrow IPC bytes; no spill directory.
+ENGINE_REV = 10
 
 
 def main():
@@ -149,14 +135,6 @@ def main():
     t = time.time()
     integ = integ_fut.result()
     t_integ_wait = time.time() - t
-    w = getattr(integ_fut, "watcher", None)
-    integ_stats = None
-    if w is not None:
-        integ_stats = {
-            k: (round(v, 3) if isinstance(v, float) else v)
-            for k, v in w.stats.items()
-        }
-        integ_stats["aborted"] = bool(w._aborted)
     n_dup = integ["dup_rows_excess"]
     n_ord = integ["ordering_violations"]
     secs = time.time() - t0
@@ -180,8 +158,6 @@ def main():
             # the violations pass returned (0.0 = fully hidden)
             "integrity_wait": round(t_integ_wait, 2),
         },
-        # watcher decomposition of the wait (None on the cold path)
-        "integ_stats": integ_stats,
     }
     with open(args.out, "w") as f:
         json.dump(out, f)

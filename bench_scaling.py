@@ -92,7 +92,7 @@ def _kernel_task(args):
     from jsonschema_infer_spark.config import default_config
     from jsonschema_infer_spark.operators.pipeline import _fused_task
 
-    _, rows = _fused_task(
+    _, rows, _, _ = _fused_task(
         path, lo, hi, default_config(), "conv_id", "turn_idx", out, i
     )
     return rows

@@ -18,6 +18,18 @@ checkpoint the exact aggregation STATE, so resume is lossless (SURVEY.md
 §2.1 #20). A reference-parity schema-JSON loader still exists in
 plans/render.py.
 
+The checkpointed FUSED pipeline (`fused_with_checkpoint`) keeps one more
+file per task. ``<dir>/integrity/part-<i>.arrow`` holds the bytes of the
+task's integrity partial, the same Arrow IPC bytes the direct pipeline
+returns with the task result. The task writes it BEFORE its completion
+marker ``states/state_<i>.json``, and the marker records its byte length.
+The driver reads the partials of marked tasks only, keyed by the marker's
+task id, and raises when a marked partial is missing or has another
+length. An unmarked task's partial (a crash between the two writes) is
+rewritten by the rerun. ``FUSED_STATE_VERSION`` is part of the fused
+config fingerprint, so a directory in an older layout is refused instead
+of resumed.
+
 On a real cluster the checkpoint dir must be shared storage (HDFS/S3/...);
 in this sandbox it is a local path, which on local[N] is equivalent.
 """
@@ -43,6 +55,9 @@ from .plans.render import render_schema
 
 MANIFEST = "manifest.json"
 STATES = "states"
+# 2: integrity partials are Arrow IPC files read by marker, with the
+# partial's byte length recorded in the marker
+FUSED_STATE_VERSION = 2
 
 
 def config_fingerprint(
@@ -193,6 +208,27 @@ def infer_with_checkpoint(
     return result, manifest
 
 
+def _read_partial(integ_dir: str, rec: dict) -> bytes:
+    """The integrity partial a completion marker vouches for; raises when
+    it is missing or its length differs from the one the marker records."""
+    from .operators.pipeline import _partial_path
+
+    p = _partial_path(integ_dir, rec["pid"])
+    try:
+        with open(p, "rb") as fh:
+            data = fh.read()
+    except FileNotFoundError:
+        data = None
+    want = rec.get("partial_bytes")
+    if data is None or len(data) != want:
+        got = "missing" if data is None else f"{len(data)} bytes"
+        raise ValueError(
+            f"integrity partial {p} is {got}, but its completion marker "
+            f"records {want} bytes; use a fresh checkpoint_dir"
+        )
+    return data
+
+
 def fused_with_checkpoint(
     spark,
     path: str,
@@ -201,24 +237,23 @@ def fused_with_checkpoint(
     conv_col: str = "conv_id",
     idx_col: str = "turn_idx",
     rg_per_task: int = 4,
-    distinct_strategy: str = "auto",
     _skip_tasks=None,  # test hook: simulate tasks that never finish
 ):
     """Checkpointed, resumable form of the FUSED benchmark pipeline
     (``operators.pipeline.infer_and_integrity_parquet``): each (file,
-    row-group-range) task writes its integrity partial parquet and then —
-    last, as the completion marker — its inference state JSON with
-    lineage (file, row-group range, rows, seconds, attempt). A resumed
-    run skips tasks whose marker exists WITHOUT re-reading their bytes;
-    the driver merges whatever states exist and reduces the spilled
-    integrity partials, so a partial manifest is still a valid partial
-    result (associative merges on both sides).
+    row-group-range) task writes its integrity partial and then — last,
+    as the completion marker — its inference state JSON with lineage
+    (file, row-group range, rows, seconds, attempt, partial length). A
+    resumed run skips tasks whose marker exists WITHOUT re-reading their
+    bytes; the driver merges the states and the partials of the marked
+    tasks, so a partial manifest is still a valid partial result
+    (associative merges on both sides).
 
     Returns (InferResult | None, integrity dict | None, manifest) —
     the results are None only when no task has completed yet."""
     from .operators.infer_spark import _list_rg_tasks, list_parquet_files
     from .operators.pipeline import _fused_task
-    from .operators.validate import reduce_spilled_partials
+    from .operators.validate import _merge_partial_blobs
 
     config = config or default_config()
     if config.max_samples > 0:
@@ -234,12 +269,16 @@ def fused_with_checkpoint(
         )
     files = list_parquet_files(path)
     tasks = _list_rg_tasks(files, rg_per_task)
-    fp = config_fingerprint(config, f"fused:{conv_col}:{idx_col}:{rg_per_task}", None)
+    fp = config_fingerprint(
+        config,
+        f"fused:v{FUSED_STATE_VERSION}:{conv_col}:{idx_col}:{rg_per_task}",
+        None,
+    )
 
     states_dir = os.path.join(checkpoint_dir, STATES)
-    spill_dir = os.path.join(checkpoint_dir, "integrity")
+    integ_dir = os.path.join(checkpoint_dir, "integrity")
     os.makedirs(states_dir, exist_ok=True)
-    os.makedirs(spill_dir, exist_ok=True)
+    os.makedirs(integ_dir, exist_ok=True)
 
     mpath = os.path.join(checkpoint_dir, MANIFEST)
     if os.path.exists(mpath):
@@ -262,8 +301,8 @@ def fused_with_checkpoint(
         if os.path.exists(spath) or i in skip:
             return None
         t0 = time.time()
-        st, rows = _fused_task(
-            f, lo, hi, config, conv_col, idx_col, spill_dir, i
+        st, rows, _, (partial,) = _fused_task(
+            f, lo, hi, config, conv_col, idx_col, integ_dir, i
         )
         ctx = TaskContext.get()
         _atomic_write(
@@ -276,6 +315,7 @@ def fused_with_checkpoint(
                     "rows": rows,
                     "secs": time.time() - t0,
                     "attempt": ctx.attemptNumber() if ctx is not None else 0,
+                    "partial_bytes": len(partial),
                     "state": S.state_to_jsonable(st),
                 }
             ),
@@ -284,16 +324,17 @@ def fused_with_checkpoint(
 
     t0 = time.time()
     spark.sparkContext.parallelize(
-        list(enumerate(tasks)), max(len(tasks), 1)
+        list(enumerate(tasks)), len(tasks)
     ).map(run).collect()
 
-    states, partitions, lineage = [], [], []
+    states, partials, partitions, lineage = [], [], [], []
     for fn in sorted(os.listdir(states_dir)):
         if not (fn.startswith("state_") and fn.endswith(".json")):
             continue  # orphaned "*.json.tmp.<pid>" from a killed writer
         with open(os.path.join(states_dir, fn)) as f:
             rec = json.load(f)
         states.append(S.state_from_jsonable(rec["state"]))
+        partials.append(_read_partial(integ_dir, rec))
         partitions.append((rec["pid"], rec["rows"], rec["secs"]))
         lineage.append(
             {
@@ -319,7 +360,7 @@ def fused_with_checkpoint(
             partitions=partitions,
             wall_secs=time.time() - t0,
         )
-        integ = reduce_spilled_partials(spark, spill_dir, distinct_strategy)
+        integ = _merge_partial_blobs(partials)
 
     manifest = {
         "config_fingerprint": fp,

@@ -668,16 +668,20 @@ def _make_fold(config: InferConfig, mode: str, json_column, order_cols=None):
 
 def list_parquet_files(path: str) -> list:
     """Data files under a parquet path (skips _SUCCESS/_metadata/dotfiles),
-    sorted for deterministic task numbering."""
+    sorted for deterministic task numbering. A directory without data files
+    raises ValueError, as Spark's parquet reader refuses one."""
     import glob as _glob
     import os
 
     if os.path.isdir(path):
-        return sorted(
+        files = sorted(
             p
             for p in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
             if os.path.isfile(p) and not os.path.basename(p).startswith(("_", "."))
         )
+        if not files:
+            raise ValueError(f"no parquet data files under {path}")
+        return files
     return [path]
 
 

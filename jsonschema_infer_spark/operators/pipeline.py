@@ -4,26 +4,32 @@ a SINGLE native parquet scan.
 The north_rule pipeline is infer -> compile -> validate. Composed from the
 standalone operators it scans the table twice before validation: once for
 the inference fold (`infer_parquet`) and once for the integrity fold
-(`transcript_integrity_native`). Both folds are per-partition
+(`validate.transcript_integrity_parquet`). Both folds are per-partition
 pre-aggregations over the same rows — the classic multi-aggregate fusion a
 100 TB job cannot afford to skip, since the second scan is the same IO (and
-on this single-disk sandbox, the same wall-clock) all over again.
+on a single disk, the same wall-clock) all over again.
 
 Here each (file, row-group-range) task iterates its Arrow batches ONCE:
 
     pyarrow row-group scan (memory-mapped, no Spark row pipeline)
       -> vectorized inference fold (observe every column)   \\ same batch
       -> per-conversation integrity pre-aggregation          / stream
-    inference partial  -> returned, merged via the associative combOp
-                          (collect+reduce, or treeReduce for large P)
-    integrity partials -> spilled to parquet (a few % of input bytes),
-                          reduced by validate.reduce_spilled_partials
-                          (driver merge or distributed, picked at runtime
-                          from the measured spill size)
+      -> (optional) violation counts for a predicted spec   /
+
+and returns everything it produced as one task result: the inference
+state, the row count, the violation-count vector and the integrity partial
+as Arrow IPC bytes. One associative combine (merge states, add rows, add
+vectors, concatenate partials) reduces the results, by collect or by
+treeReduce for many tasks, and the driver merges the partials with
+`validate._merge_partials_local`. Nothing touches a shared filesystem, so
+the path is correct on any cluster manager. The partials' volume is
+bounded by ``spark.driver.maxResultSize`` (Spark fails the job loudly
+beyond it); past that bound use `validate.transcript_integrity_summary`,
+whose reduce is a shuffle.
 
 Results are identical to running `infer_parquet` and
-`transcript_integrity_native` separately — the folds and reduces are the
-same code; tests assert equality on clean and violated tables.
+`transcript_integrity_summary` separately — the folds are the same code;
+tests assert equality on clean, violated and shuffled tables.
 
 Reference anchor: the sequential equivalent is AddSample folding each
 document once (`/root/reference/jsonschema.go:57-92`); validation is the
@@ -33,9 +39,12 @@ natural distributed home is the same pass that already reads the rows.
 
 from __future__ import annotations
 
+import functools
 import math
+import os
 import time
 
+import numpy as np
 import pyarrow as pa
 
 from ..config import InferConfig, default_config
@@ -46,10 +55,15 @@ from .infer_spark import (
     _list_rg_tasks,
     fold_batches_columnar,
     list_parquet_files,
-    merge_states,
 )
-from .validate import _integrity_fold, reduce_spilled_partials
+from .validate import _integrity_fold, _ipc_ser, _merge_partial_blobs
 from ..plans.render import render_schema
+
+
+def _partial_path(out_dir: str, i: int) -> str:
+    """Where `_fused_task` writes task ``i``'s integrity partial when it is
+    given an ``out_dir``."""
+    return os.path.join(out_dir, f"part-{i:05d}.arrow")
 
 
 def _fused_task(
@@ -59,23 +73,25 @@ def _fused_task(
     config: InferConfig,
     conv_col: str,
     idx_col: str,
-    out_dir: str,
+    out_dir: str | None,
     i: int,
     order_cols: list | None = None,
     violation_spec: list | None = None,
 ) -> tuple:
     """One fused task: fold row-groups [lo, hi) of ``f`` through the
     inference observer while teeing (conv, turn) into the integrity
-    pre-aggregation; integrity partials land in ``out_dir/part-<i>`` (a
-    task retry overwrites the same file — idempotent). Returns
-    (state, rows), or (state, rows, violation_counts_vector) when
-    ``violation_spec`` is given — the same batch stream then ALSO feeds
-    the arrow violation counter (validate.arrow_violation_counter), so a
-    predicted constraint spec is validated in this one pass instead of a
-    second whole-table scan. Shared by the direct and checkpointed
-    pipelines (and driven standalone by bench_scaling's kernel control)."""
-    import os
+    pre-aggregation and, when ``violation_spec`` is given, into the arrow
+    violation counter (validate.arrow_violation_counter), so a predicted
+    constraint spec is validated in this one pass instead of a second
+    whole-table scan.
 
+    Returns ``(state, rows, violation_counts, [partial])``: the counts
+    vector is empty without a spec, and ``partial`` is the per-conversation
+    integrity partial as Arrow IPC bytes (``b""`` when the range holds no
+    non-null keys), wrapped in a list so results combine by concatenation.
+    With an ``out_dir`` the same bytes are also written to
+    ``_partial_path(out_dir, i)`` (the checkpoint's durable copy; a task
+    retry rewrites identical bytes)."""
     import pyarrow.parquet as pq
 
     from .validate import arrow_violation_counter
@@ -83,10 +99,10 @@ def _fused_task(
     integrity_fold = _integrity_fold(conv_col, idx_col)
     pf = pq.ParquetFile(f)
     counter = None
-    vcounts = None
     vnames: list = []
     if violation_spec is not None:
         vnames, counter = arrow_violation_counter(violation_spec, pf.schema_arrow)
+    vcounts = np.zeros(len(vnames), dtype=np.int64)
     # batch_size matches infer_parquet so the inference fold sees the
     # exact same batch boundaries (value-identical partials)
     batches = pf.iter_batches(batch_size=10_000, row_groups=list(range(lo, hi)))
@@ -107,34 +123,21 @@ def _fused_task(
                 pa.RecordBatch.from_arrays(cols, names=[conv_col, idx_col])
             )
             if counter is not None:
-                c = counter(b)
-                vcounts = c if vcounts is None else vcounts + c
+                vcounts = vcounts + counter(b)
             yield b
 
     st, rows = fold_batches_columnar(tee(batches), config, order_cols)
     out = list(integrity_fold(iter(kept)))
-    if out:
-        # write-then-rename: the IncrementalSpillWatcher tails this
-        # directory DURING the scan, so a part file must become visible
-        # under its final name only when complete (rename is atomic; the
-        # pid suffix keeps concurrent attempts from sharing a temp file)
-        # the leading dot keeps a torn tmp (writer killed mid-write)
-        # invisible to every reader: pyarrow dataset discovery and Spark
-        # both ignore dot-files, and the watcher/cold globs match only
-        # the final name
-        final = os.path.join(out_dir, f"part-{i:05d}.parquet")
-        tmp = os.path.join(
-            out_dir, f".part-{i:05d}.parquet.inprogress-{os.getpid()}"
-        )
-        pq.write_table(pa.Table.from_batches(out), tmp)
-        os.replace(tmp, final)
-    if violation_spec is not None:
-        import numpy as np
+    partial = _ipc_ser(pa.Table.from_batches(out)) if out else b""
+    if out_dir is not None:
+        with open(_partial_path(out_dir, i), "wb") as fh:
+            fh.write(partial)
+    return st, rows, vcounts, [partial]
 
-        if vcounts is None:  # zero batches in this task's range
-            vcounts = np.zeros(len(vnames), dtype=np.int64)
-        return st, rows, vcounts
-    return st, rows
+
+def _combine(a: tuple, b: tuple) -> tuple:
+    """Associative combine of two `_fused_task` results."""
+    return S.merge(a[0], b[0]), a[1] + b[1], a[2] + b[2], a[3] + b[3]
 
 
 def infer_and_integrity_parquet(
@@ -146,14 +149,12 @@ def infer_and_integrity_parquet(
     rg_per_task: int = 4,
     order_cols: list | None = None,
     spill_dir: str | None = None,
-    distinct_strategy: str = "auto",
-    local_merge_max_bytes: int = 256 << 20,
     integrity: str = "eager",
     violation_spec: list | None = None,
 ) -> tuple:
     """Fused scan: returns ``(InferResult, integrity_dict)`` where the
     InferResult equals ``infer_parquet(spark, path, config, ...)`` and the
-    dict equals ``transcript_integrity_native(spark, path, ...)`` — one
+    dict equals ``transcript_integrity_summary`` over the same files — one
     data pass instead of two.
 
     ``violation_spec`` (a validate.constraint_spec plan, typically the
@@ -168,14 +169,15 @@ def infer_and_integrity_parquet(
     to the classic violations pass on a mismatch (see bench/pipeline_job
     for the canonical hit/miss flow).
 
-    ``integrity="background"`` returns ``(InferResult, Future)`` instead:
-    the spilled-partials reduce — a driver-side cost that needs nothing
+    ``integrity="background"`` returns a ``Future`` in place of the dict:
+    the driver merge of the returned partials — a cost that needs nothing
     from the caller — runs on a worker thread while the caller proceeds
-    (typically compiling constraints and launching the violations pass,
-    which only need the InferResult). ``Future.result()`` yields the same
-    dict as the eager form. On a real cluster the driver is its own
-    machine, so this overlap is free hardware; serializing the reduce
-    before downstream Spark jobs was a pure Amdahl term.
+    (typically compiling constraints, which only needs the InferResult).
+    ``Future.result()`` yields the same dict as the eager form.
+
+    ``spill_dir`` is accepted and ignored: partials travel with the task
+    results. It remains only so existing callers keep working, and a
+    benchmark-only change will drop it.
 
     ``max_samples`` is not supported here (a row budget caps inference but
     integrity must still see every row — the two folds would need
@@ -187,7 +189,7 @@ def infer_and_integrity_parquet(
     if config.max_samples > 0:
         raise ValueError(
             "max_samples caps the inference scan but integrity must see "
-            "every row; run infer_parquet + transcript_integrity_native "
+            "every row; run infer_parquet + transcript_integrity_parquet "
             "separately for capped inference"
         )
     if config.examples and not order_cols:
@@ -195,122 +197,58 @@ def infer_and_integrity_parquet(
             "examples capture needs a total order in distributed mode: pass "
             "order_cols=[...] (e.g. ['conv_id', 'turn_idx'])"
         )
-    import os
-    import shutil
-    import tempfile
-
     t0 = time.time()
     tasks = _list_rg_tasks(list_parquet_files(path), rg_per_task)
-    out_dir = spill_dir or tempfile.mkdtemp(prefix="jis_pipeline_")
-    os.makedirs(out_dir, exist_ok=True)
 
+    vnames: list = []
     if violation_spec is not None:
         # validate support up front (raises UnsupportedArrowSpec on the
         # driver, not inside 200 tasks) and capture the constraint names
-        import pyarrow.parquet as _pq
+        import pyarrow.parquet as pq
 
         from .validate import arrow_violation_counter
 
         vnames, _ = arrow_violation_counter(
-            violation_spec, _pq.ParquetFile(tasks[0][0]).schema_arrow
+            violation_spec, pq.ParquetFile(tasks[0][0]).schema_arrow
         )
 
     def run(item):
         i, (f, lo, hi) = item
         return _fused_task(
-            f, lo, hi, config, conv_col, idx_col, out_dir, i, order_cols,
+            f, lo, hi, config, conv_col, idx_col, None, i, order_cols,
             violation_spec,
         )
 
-    # Overlap the spill reduce with the scan itself: a driver-side tail
-    # thread decodes each part file as soon as its task lands it, so the
-    # post-scan reduce only runs the in-memory merge kernel (the rev-6
-    # one-scan pipeline removed the stages that used to hide this cost —
-    # see IncrementalSpillWatcher). Only for 'auto', whose small-spill
-    # branch the watcher reproduces bit-identically; explicit distributed
-    # strategies skip it.
-    watcher = None
-    if distinct_strategy == "auto":
-        from .validate import IncrementalSpillWatcher
-
-        watcher = IncrementalSpillWatcher(
-            out_dir, max_bytes=local_merge_max_bytes
+    rdd = spark.sparkContext.parallelize(list(enumerate(tasks)), len(tasks)).map(run)
+    if len(tasks) > _TREE_REDUCE_THRESHOLD:
+        depth = max(2, int(math.ceil(math.log(max(len(tasks), 2), 64))))
+        merged, total_rows, vtotals, partials = rdd.treeReduce(_combine, depth=depth)
+    else:
+        merged, total_rows, vtotals, partials = functools.reduce(
+            _combine, rdd.collect()
         )
 
-    def _reduce_spills():
-        if watcher is not None:
-            got = watcher.finalize()
-            if got is not None:
-                return got
-        return reduce_spilled_partials(
-            spark, out_dir, distinct_strategy, local_merge_max_bytes
-        )
+    schema = S.finalize(merged, config)
+    res = InferResult(
+        state=merged,
+        config=config,
+        schema=schema,
+        schema_json=render_schema(schema, config.indent),
+        total_rows=total_rows,
+        partitions=[(i, 0, 0.0) for i in range(len(tasks))],
+        wall_secs=time.time() - t0,
+    )
+    if integrity == "background":
+        from concurrent.futures import ThreadPoolExecutor
 
-    cleanup_owned_by_future = False
-    try:
-        rdd = spark.sparkContext.parallelize(
-            list(enumerate(tasks)), max(len(tasks), 1)
-        ).map(run)
-        vtotals = None
-        if len(tasks) > _TREE_REDUCE_THRESHOLD:
-            depth = max(2, int(math.ceil(math.log(max(len(tasks), 2), 64))))
-            if violation_spec is not None:
-                merged, total_rows, vtotals = rdd.treeReduce(
-                    lambda a, b: (
-                        S.merge(a[0], b[0]), a[1] + b[1], a[2] + b[2]
-                    ),
-                    depth=depth,
-                )
-            else:
-                merged, total_rows = rdd.treeReduce(
-                    lambda a, b: (S.merge(a[0], b[0]), a[1] + b[1]),
-                    depth=depth,
-                )
-        else:
-            pairs = rdd.collect()
-            merged = merge_states([p[0] for p in pairs])
-            total_rows = sum(p[1] for p in pairs)
-            if violation_spec is not None:
-                vtotals = sum(p[2] for p in pairs)
-
-        schema = S.finalize(merged, config)
-        res = InferResult(
-            state=merged,
-            config=config,
-            schema=schema,
-            schema_json=render_schema(schema, config.indent),
-            total_rows=total_rows,
-            partitions=[(i, 0, 0.0) for i in range(len(tasks))],
-            wall_secs=time.time() - t0,
-        )
-        if integrity == "background":
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(1)
-
-            def _reduce_then_cleanup():
-                try:
-                    return _reduce_spills()
-                finally:
-                    if spill_dir is None:
-                        shutil.rmtree(out_dir, ignore_errors=True)
-
-            fut = pool.submit(_reduce_then_cleanup)
-            pool.shutdown(wait=False)  # thread finishes; submit no more
-            fut.watcher = watcher  # expose stats/abort state to callers
-            cleanup_owned_by_future = True
-            if violation_spec is not None:
-                return res, fut, dict(zip(vnames, (int(v) for v in vtotals)))
-            return res, fut
-        integ = _reduce_spills()
-        if violation_spec is not None:
-            return res, integ, dict(zip(vnames, (int(v) for v in vtotals)))
+        pool = ThreadPoolExecutor(1)
+        integ = pool.submit(_merge_partial_blobs, partials)
+        pool.shutdown(wait=False)  # thread finishes; submit no more
+    else:
+        integ = _merge_partial_blobs(partials)
+    if violation_spec is None:
         return res, integ
-    finally:
-        if watcher is not None:
-            watcher._stop.set()  # idempotent; stops the poller on errors
-        if spill_dir is None and not cleanup_owned_by_future:
-            shutil.rmtree(out_dir, ignore_errors=True)
+    return res, integ, dict(zip(vnames, (int(v) for v in vtotals)))
 
 
 def predict_constraint_spec(

@@ -2,8 +2,11 @@
 
 The fused scan (pipeline.infer_and_integrity_parquet) must return exactly
 the InferResult of infer_parquet AND the integrity dict of
-transcript_integrity_native on the same files — the folds are shared code,
+transcript_integrity_summary on the same files — the folds are shared code,
 so any divergence is a wiring bug in the tee."""
+
+import json
+import os
 
 import pytest
 
@@ -12,21 +15,44 @@ from jsonschema_infer_spark.operators import validate as V
 from jsonschema_infer_spark.operators.infer_spark import infer_parquet
 from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
 
+ZERO = {"dup_rows_excess": 0, "ordering_violations": 0}
+
+
+def _rg_copy(src_path: str, dst: str, n_rg: int, seed: int | None = None) -> str:
+    """``src_path`` rewritten into ``n_rg`` row groups, its rows permuted
+    by ``seed`` when one is given."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(src_path)
+    if seed is not None:
+        t = t.take(np.random.default_rng(seed).permutation(t.num_rows))
+    pq.write_table(t, dst, row_group_size=-(-t.num_rows // n_rg))
+    assert pq.ParquetFile(dst).num_row_groups == n_rg
+    return dst
+
+
+@pytest.fixture(scope="module")
+def tables(tx_paths, tmp_path_factory):
+    """The clean and violated fixtures, plus the violated rows shuffled
+    into 8 row groups, so that most conversations span tasks."""
+    d = tmp_path_factory.mktemp("fused_tables")
+    return {
+        "clean": tx_paths["clean"],
+        "viol": tx_paths["viol"],
+        "shuffled": _rg_copy(tx_paths["viol"], str(d / "shuffled.parquet"), 8, seed=7),
+    }
+
 
 def test_fused_matches_standalone_on_violated(spark, tx_paths):
     want_infer = infer_parquet(spark, tx_paths["viol"], rg_per_task=1)
-    want_integ = V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1
-    )
+    want_integ = V.transcript_integrity_summary(spark.read.parquet(tx_paths["viol"]))
     res, integ = infer_and_integrity_parquet(
         spark, tx_paths["viol"], rg_per_task=1
     )
     assert res.schema_json == want_infer.schema_json
     assert res.total_rows == want_infer.total_rows
     assert integ == want_integ
-    # and against the mapInArrow summary form, the third implementation
-    viol = spark.read.parquet(tx_paths["viol"])
-    assert integ == V.transcript_integrity_summary(viol)
 
 
 def test_fused_matches_standalone_on_clean(spark, tx_paths):
@@ -41,8 +67,8 @@ def test_fused_matches_standalone_on_clean(spark, tx_paths):
 
 def test_fused_background_integrity_matches_eager(spark, tx_paths):
     """integrity='background' returns (res, Future); the resolved dict and
-    the InferResult are value-identical to the eager form, the spill dir
-    is cleaned up after resolution, and a bad mode is refused."""
+    the InferResult are value-identical to the eager form, and a bad mode
+    is refused."""
     want_res, want_integ = infer_and_integrity_parquet(
         spark, tx_paths["viol"], rg_per_task=1
     )
@@ -58,13 +84,47 @@ def test_fused_background_integrity_matches_eager(spark, tx_paths):
         )
 
 
-def test_fused_distributed_reduce_matches(spark, tx_paths):
-    # force the distributed split reduce (zero local-merge budget): same dict
-    want = V.transcript_integrity_native(spark, tx_paths["viol"], rg_per_task=1)
-    _, integ = infer_and_integrity_parquet(
-        spark, tx_paths["viol"], rg_per_task=1, local_merge_max_bytes=0
+@pytest.mark.parametrize("branch", ["collect", "tree"])
+@pytest.mark.parametrize("table", ["clean", "viol", "shuffled"])
+def test_fused_integrity_equals_summary(spark, tables, table, branch, monkeypatch):
+    """Fused integrity is bit-equal to transcript_integrity_summary through
+    both result reduces, with and without in-scan violation counting; the
+    shuffled table makes most conversations span tasks."""
+    from jsonschema_infer_spark.operators import pipeline as P
+
+    path = tables[table]
+    if branch == "tree":
+        monkeypatch.setattr(P, "_TREE_REDUCE_THRESHOLD", 0)
+    want = V.transcript_integrity_summary(spark.read.parquet(path))
+    assert (want == ZERO) == (table == "clean")
+    res, integ = infer_and_integrity_parquet(spark, path, rg_per_task=1)
+    pred = P.predict_constraint_spec(path)
+    res2, integ2, vcounts = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, violation_spec=pred
     )
-    assert integ == want
+    assert integ == integ2 == want
+    assert res.total_rows == res2.total_rows == spark.read.parquet(path).count()
+    assert vcounts == _spark_truth(spark, path, pred)
+
+
+def test_fused_distributed_reduce_matches(spark, tables, monkeypatch):
+    """The treeReduce branch (many tasks) combines states, row counts,
+    violation vectors and partials to the same result as the collect
+    branch."""
+    from jsonschema_infer_spark.operators import pipeline as P
+
+    path = tables["shuffled"]
+    pred = P.predict_constraint_spec(path)
+    want = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, violation_spec=pred
+    )
+    monkeypatch.setattr(P, "_TREE_REDUCE_THRESHOLD", 0)
+    got = infer_and_integrity_parquet(
+        spark, path, rg_per_task=1, violation_spec=pred
+    )
+    assert got[0].schema_json == want[0].schema_json
+    assert got[0].total_rows == want[0].total_rows
+    assert got[1:] == want[1:]
 
 
 def test_fused_examples_capture_matches(spark, tx_paths):
@@ -132,8 +192,6 @@ def test_fused_checkpoint_resume_and_lineage(spark, tx_paths, tmp_path):
     assert integ2 == integ_d
 
     # config/input mismatch is refused
-    import pytest
-
     with pytest.raises(ValueError):
         fused_with_checkpoint(spark, path, ckpt, rg_per_task=2)
 
@@ -145,14 +203,87 @@ def test_fused_checkpoint_ignores_orphan_tmp_files(spark, tx_paths, tmp_path):
     ckpt = str(tmp_path / "tmpfile_ckpt")
     res1, integ1, man1 = fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
     # simulate a writer killed between tmp write and os.replace
-    import os
-
     states = os.path.join(ckpt, "states")
     with open(os.path.join(states, "state_000000.json.tmp.999"), "w") as f:
         f.write('{"truncat')  # torn write
     res2, integ2, man2 = fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
     assert res2.total_rows == res1.total_rows  # no double-count, no crash
     assert integ2 == integ1
+
+
+def test_fused_checkpoint_reads_partials_of_marked_tasks_only(
+    spark, tx_paths, tmp_path
+):
+    """A task whose completion marker is lost, and which the resume does
+    not rerun, contributes neither rows nor integrity: its partial is
+    still on disk but must not be read."""
+    from jsonschema_infer_spark.checkpoint import fused_with_checkpoint
+
+    path = _rg_copy(tx_paths["viol"], str(tmp_path / "viol6.parquet"), 6)
+    ckpt = str(tmp_path / "ckpt")
+    _, _, man0 = fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
+    assert man0["complete"]
+    os.remove(os.path.join(ckpt, "states", "state_000002.json"))
+    res, integ, man = fused_with_checkpoint(
+        spark, path, ckpt, rg_per_task=1, _skip_tasks=[2]
+    )
+    fresh, fresh_integ, _ = fused_with_checkpoint(
+        spark, path, str(tmp_path / "fresh"), rg_per_task=1, _skip_tasks=[2]
+    )
+    assert 2 not in man["completed_tasks"]
+    assert res.total_rows == fresh.total_rows
+    assert integ == fresh_integ
+
+
+def test_fused_checkpoint_refuses_bad_partial_and_old_layout(
+    spark, tx_paths, tmp_path
+):
+    """A marked task's partial that is torn or missing raises instead of
+    merging short, and a directory whose fingerprint lacks the fused
+    state-format version is refused."""
+    from jsonschema_infer_spark import checkpoint as C
+
+    path = _rg_copy(tx_paths["viol"], str(tmp_path / "viol6.parquet"), 6)
+    ckpt = str(tmp_path / "ckpt")
+    C.fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
+    part = os.path.join(ckpt, "integrity", "part-00001.arrow")
+    with open(part, "rb") as fh:
+        data = fh.read()
+    with open(part, "wb") as fh:
+        fh.write(data[: len(data) // 2])
+    with pytest.raises(ValueError, match="completion marker"):
+        C.fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
+    os.remove(part)
+    with pytest.raises(ValueError, match="missing"):
+        C.fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
+
+    mpath = os.path.join(ckpt, C.MANIFEST)
+    with open(mpath) as fh:
+        man = json.load(fh)
+    man["config_fingerprint"] = C.config_fingerprint(
+        default_config(), "fused:conv_id:turn_idx:1", None
+    )
+    with open(mpath, "w") as fh:
+        json.dump(man, fh)
+    with pytest.raises(ValueError, match="does not match"):
+        C.fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
+
+
+def test_empty_input_directory_raises(spark, tmp_path):
+    from jsonschema_infer_spark.checkpoint import fused_with_checkpoint
+    from jsonschema_infer_spark.operators.pipeline import predict_constraint_spec
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    calls = (
+        lambda: predict_constraint_spec(str(empty)),
+        lambda: infer_and_integrity_parquet(spark, str(empty)),
+        lambda: fused_with_checkpoint(spark, str(empty), str(tmp_path / "ck")),
+    )
+    for call in calls:
+        with pytest.raises(ValueError, match="no parquet data files"):
+            call()
 
 
 def test_validation_prewarm_hit_and_miss(spark, tx_paths):
@@ -256,8 +387,8 @@ def test_fused_violation_counts_match_spark(spark, tx_paths):
     # cannot flag the snapshot
     assert all(v == 0 for v in vcounts.values())
     # integrity unchanged by the extra counting
-    assert integ == V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1
+    assert integ == V.transcript_integrity_summary(
+        spark.read.parquet(tx_paths["viol"])
     )
 
     # cross-table spec: clean table's constraints against the violated

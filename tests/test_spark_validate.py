@@ -96,64 +96,8 @@ def test_integrity_parquet_native_matches(spark, tx_paths):
     assert V.transcript_integrity_parquet(
         spark, tx_paths["viol"], rg_per_task=1
     ) == want
-    # native map side + distributed reduce (the scaling form)
-    assert V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1
-    ) == want
-    # the long-conversation split strategy: identical result
-    assert V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1, distinct_strategy="split"
-    ) == want
-    assert V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1, distinct_strategy="collect"
-    ) == want
-    # auto with a zero threshold must route to the distributed reduce
-    assert V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1, local_merge_max_bytes=0
-    ) == want
-    assert V.transcript_integrity_summary(viol, distinct_strategy="split") == want
-    # tree-reduce escape hatch: executors consolidate pairwise, the driver
-    # merges one consolidated table — identical counts
-    assert V.transcript_integrity_native(
-        spark, tx_paths["viol"], rg_per_task=1, distinct_strategy="tree"
-    ) == want
-    clean = V.transcript_integrity_native(spark, tx_paths["clean"], rg_per_task=1)
+    clean = V.transcript_integrity_parquet(spark, tx_paths["clean"], rg_per_task=1)
     assert clean == {"dup_rows_excess": 0, "ordering_violations": 0}
-
-
-def test_consolidate_partials_associative_and_equal():
-    """_consolidate_partials (the tree combine) must agree with
-    _merge_partials_local on any split of the same partial rows, including
-    negative turn indices and multi-part convs."""
-    import pyarrow as pa
-
-    data = {
-        "conv": ["a", "b", "c", "c", "d", "d", "d"],
-        "n": pa.array([3, 4, 3, 3, 2, 2, 1], type=pa.int64()),
-        "mn": pa.array([0, 0, 0, 3, -2, 0, 2], type=pa.int32()),
-        "mx": pa.array([2, 2, 2, 5, -1, 1, 2], type=pa.int32()),
-        "ndl": pa.array([3, 3, 3, 3, 2, 2, 1], type=pa.int64()),
-        "turns": pa.array(
-            [[0, 1, 2], [0, 1, 2], [0, 1, 2], [3, 4, 5],
-             [-2, -1], [0, 1], [2]],
-            type=pa.list_(pa.int32()),
-        ),
-    }
-    full = pa.table(data)
-    want = V._merge_partials_local(full)
-    one = V._consolidate_partials(full)
-    # consolidated: one row per conv, and the local merge of it agrees
-    assert one.num_rows == 4
-    assert V._merge_partials_local(one) == want
-    # associativity: consolidate halves, concat, consolidate again
-    left = V._consolidate_partials(full.slice(0, 4))
-    right = V._consolidate_partials(full.slice(4))
-    again = V._consolidate_partials(pa.concat_tables([left, right]))
-    assert V._merge_partials_local(again) == want
-    # IPC round-trip used by treeReduce
-    assert V._ipc_deser(V._ipc_ser(one)).equals(one)
-    # empty table passes through
-    assert V._consolidate_partials(full.slice(0, 0)).num_rows == 0
 
 
 def test_ts_regressions_match_injections(compiled):
@@ -416,172 +360,73 @@ def test_merge_partials_local_hash_path_and_collisions():
     assert V._merge_partials_local(mixed) == want
 
 
-def _spill_tables():
-    """Two genuine-shaped spill tables (ch + ndl, like _fused_task writes):
-    conv "a" spans both files with a duplicate turn and a non-zero start;
-    everything else is clean."""
-    import pyarrow as pa
-
-    import pandas as pd
-
-    def tbl(convs, ns, mns, mxs, turns):
-        ch = pd.util.hash_array(
-            pa.array(convs).to_numpy(zero_copy_only=False).astype(object)
-        ).view("int64")
-        return pa.table(
-            {
-                "conv": pa.array(convs, type=pa.string()),
-                "ch": pa.array(ch, type=pa.int64()),
-                "n": pa.array(ns, type=pa.int64()),
-                "mn": pa.array(mns, type=pa.int32()),
-                "mx": pa.array(mxs, type=pa.int32()),
-                "ndl": pa.array([len(t) for t in turns], type=pa.int64()),
-                "turns": pa.array(turns, type=pa.list_(pa.int32())),
-            }
-        )
-
-    t1 = tbl(["a", "b"], [3, 3], [1, 0], [3, 2], [[1, 2, 3], [0, 1, 2]])
-    t2 = tbl(["a", "c"], [2, 2], [3, 0], [4, 1], [[3, 4], [0, 1]])
-    # conv a: n=5, union{1,2,3,4}=4 -> 1 dup excess; mn=1 -> ordering bad
-    return t1, t2
-
-
-def test_incremental_spill_watcher_matches_cold(tmp_path):
-    """The watcher's overlapped consume + finalize is bit-identical to the
-    cold reduce_spilled_partials path on the same directory, including
-    files that land AFTER the watcher started."""
-    import time as _time
-
-    import pyarrow.parquet as pq
-
-    t1, t2 = _spill_tables()
-    d = str(tmp_path)
-    pq.write_table(t1, f"{d}/part-00000.parquet")
-    w = V.IncrementalSpillWatcher(d, poll_secs=0.01)
-    deadline = _time.time() + 5
-    while not w._files and _time.time() < deadline:
-        _time.sleep(0.01)
-    assert w._files, "watcher never consumed the first file"
-    pq.write_table(t2, f"{d}/part-00001.parquet")  # late arrival
-    got = w.finalize()
-    want = V._merge_partials_local(pq.read_table(d))
-    assert got == want == {"dup_rows_excess": 1, "ordering_violations": 1}
-    # cold path on the untouched directory agrees (spark unused locally)
-    assert V.reduce_spilled_partials(None, d) == want
-    # the stats surface bench/diag_integrity_wait.py reads: every file
-    # accounted for, the one-shot resolve sort timed, dup values found
-    assert w.stats["files_total"] == 2
-    assert w.stats["dup_vals"] >= 1
-    assert w.stats["matched_rows"] >= 2
-    assert w.stats["resolve_sort_secs"] >= 0.0
-    assert w.stats["decode_secs"] > 0.0
-
-
-def test_incremental_spill_watcher_ignores_inprogress(tmp_path):
-    """A torn ``.part-*.inprogress-<pid>`` temp file (writer killed between
-    write and rename) is invisible to the watcher's glob AND to the cold
-    path's reader."""
-    import pyarrow.parquet as pq
-
-    t1, t2 = _spill_tables()
-    d = str(tmp_path)
-    pq.write_table(t1, f"{d}/part-00000.parquet")
-    with open(f"{d}/.part-00001.parquet.inprogress-42", "wb") as f:
-        f.write(b"not a parquet footer")
-    w = V.IncrementalSpillWatcher(d, poll_secs=0.01)
-    got = w.finalize()
-    assert got == V._merge_partials_local(t1)
-    pq.write_table(t2, f"{d}/part-00001.parquet")
-    assert V.reduce_spilled_partials(None, d) == V._merge_partials_local(
-        __import__("pyarrow").concat_tables([t1, t2])
-    )
-
-
-def test_incremental_spill_watcher_overflow_and_mismatch_fall_back(tmp_path):
-    """Byte-budget overflow and a schema-mismatched file both abort the
-    incremental path (finalize -> None) with the directory left intact for
-    the cold fallback."""
-    import pyarrow.parquet as pq
-
-    t1, t2 = _spill_tables()
-    d1 = str(tmp_path / "overflow")
-    (tmp_path / "overflow").mkdir()
-    pq.write_table(t1, f"{d1}/part-00000.parquet")
-    w = V.IncrementalSpillWatcher(d1, poll_secs=0.01, max_bytes=1)
-    assert w.finalize() is None
-    assert V.reduce_spilled_partials(None, d1) == V._merge_partials_local(t1)
-
-    d2 = str(tmp_path / "mismatch")
-    (tmp_path / "mismatch").mkdir()
-    pq.write_table(t1, f"{d2}/part-00000.parquet")
-    pq.write_table(t2.drop_columns(["ch"]), f"{d2}/part-00001.parquet")
-    w2 = V.IncrementalSpillWatcher(d2, poll_secs=0.01)
-    assert w2.finalize() is None
-
-
-def test_incremental_spill_watcher_empty_dir(tmp_path):
-    w = V.IncrementalSpillWatcher(str(tmp_path), poll_secs=0.01)
-    assert w.finalize() == {"dup_rows_excess": 0, "ordering_violations": 0}
-
-
-def test_incremental_spill_watcher_fuzz_vs_cold(tmp_path):
-    """Seeded fuzz: random per-conv partials scattered over random file
-    splits — watcher finalize must equal the cold kernel on every trial,
-    including negative turns, convs spanning many files, duplicate turns
-    across files, and FORCED ch collisions between different convs."""
+def test_task_partial_blobs_fuzz_vs_bruteforce():
+    """Seeded fuzz: random raw (conv, turn) rows scattered over random map
+    tasks, each task's per-conv partial shipped as Arrow IPC bytes (the
+    fused task's result) — the driver merge of the blobs must equal a
+    pure-Python per-conv judge on every trial, including negative turns,
+    duplicate turns within and across tasks, convs spanning many tasks,
+    tasks with no rows, and FORCED ch collisions between different
+    convs."""
     import random
 
-    import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     rng = random.Random(20260819)
     for trial in range(8):
         n_convs = rng.randint(1, 40)
-        rows = []  # (conv, ch, turns_list)
+        n_tasks = rng.randint(1, 12)
+        tasks = [dict() for _ in range(n_tasks)]  # conv -> raw turn list
+        raw = {}  # conv -> every raw turn, across tasks
+        ch_of = {}
         for c in range(n_convs):
             conv = f"conv{c}"
             # collide some hashes on purpose: different convs, same ch
-            ch = c % max(1, n_convs // 3) if trial % 2 else c
-            n_parts = rng.choice([1, 1, 1, 2, 3])
-            for _ in range(n_parts):
-                k = rng.randint(1, 5)
+            ch_of[conv] = c % max(1, n_convs // 3) if trial % 2 else c
+            for _ in range(rng.choice([1, 1, 1, 2, 3])):
                 lo = rng.choice([0, 0, 0, 1, -2])
-                turns = sorted(
-                    rng.sample(range(lo, lo + 8), k)
-                )
-                rows.append((conv, ch, turns))
-        rng.shuffle(rows)
-        n_files = rng.randint(1, max(2, len(rows) // 2))
-        splits = [rows[i::n_files] for i in range(n_files)]
-        d = tmp_path / f"trial{trial}"
-        d.mkdir()
-        for i, chunk in enumerate(c for c in splits if c):
+                turns = rng.sample(range(lo, lo + 8), rng.randint(1, 5))
+                if rng.random() < 0.3:
+                    turns.append(rng.choice(turns))  # duplicate row
+                task = tasks[rng.randrange(n_tasks)]
+                task.setdefault(conv, []).extend(turns)
+                raw.setdefault(conv, []).extend(turns)
+
+        blobs = []
+        for task in tasks:
+            if not task:
+                blobs.append(b"")
+                continue
+            convs = sorted(task)
+            uniq = [sorted(set(task[c])) for c in convs]
             tbl = pa.table(
                 {
-                    "conv": pa.array([r[0] for r in chunk], type=pa.string()),
-                    "ch": pa.array([r[1] for r in chunk], type=pa.int64()),
-                    "n": pa.array(
-                        [len(r[2]) + (1 if rng.random() < 0.3 else 0)
-                         for r in chunk],
-                        type=pa.int64(),
-                    ),
-                    "mn": pa.array([min(r[2]) for r in chunk], type=pa.int32()),
-                    "mx": pa.array([max(r[2]) for r in chunk], type=pa.int32()),
-                    "ndl": pa.array([len(r[2]) for r in chunk], type=pa.int64()),
-                    "turns": pa.array(
-                        [r[2] for r in chunk], type=pa.list_(pa.int32())
-                    ),
+                    "conv": pa.array(convs, type=pa.string()),
+                    "ch": pa.array([ch_of[c] for c in convs], type=pa.int64()),
+                    "n": pa.array([len(task[c]) for c in convs], type=pa.int64()),
+                    "mn": pa.array([u[0] for u in uniq], type=pa.int32()),
+                    "mx": pa.array([u[-1] for u in uniq], type=pa.int32()),
+                    "ndl": pa.array([len(u) for u in uniq], type=pa.int64()),
+                    "turns": pa.array(uniq, type=pa.list_(pa.int32())),
                 }
             )
-            pq.write_table(tbl, str(d / f"part-{i:05d}.parquet"))
-        w = V.IncrementalSpillWatcher(str(d), poll_secs=0.005)
-        got = w.finalize()
-        files = sorted(str(p) for p in d.glob("part-*.parquet"))
-        want = V._merge_partials_local(
-            pa.concat_tables([pq.read_table(p) for p in files])
-        )
+            blob = V._ipc_ser(tbl)
+            assert V._ipc_deser(blob).equals(tbl)
+            blobs.append(blob)
+
+        dup = bad = 0
+        for turns in raw.values():
+            nd = len(set(turns))
+            dup += len(turns) - nd
+            if min(turns) != 0 or max(turns) != nd - 1 or nd != len(turns):
+                bad += 1
+        want = {"dup_rows_excess": dup, "ordering_violations": bad}
+        got = V._merge_partial_blobs(blobs)
         assert got == want, f"trial {trial}: {got} != {want}"
+    assert V._merge_partial_blobs([]) == V._merge_partial_blobs([b""]) == {
+        "dup_rows_excess": 0,
+        "ordering_violations": 0,
+    }
 
 
 def test_validation_scan_nested_and_concurrent_restore(spark, tx_paths):
@@ -611,7 +456,7 @@ def test_validation_scan_nested_and_concurrent_restore(spark, tx_paths):
 
 
 def test_integrity_fold_emits_deterministic_ch(spark, tx_paths):
-    """Spilled partials carry the uint64 conv hash, identical across
+    """Integrity partials carry the uint64 conv hash, identical across
     independent fold invocations (siphash with a fixed key, no
     PYTHONHASHSEED dependence)."""
     import pyarrow as pa
