@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line:
+(default: the CPUs this process may use; driver heap $SPARK_GRAFT_MEM, default
+half of physical RAM) and prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...,
    "turns_per_sec": ..., "bench_rows": ...}
@@ -53,6 +54,22 @@ BENCH_QUERIES = [
 ]
 
 CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache")
+
+
+# --- host defaults (shared with bench_scaling.py) ----------------------------
+# SPARK_GRAFT_CPUS and SPARK_GRAFT_MEM override both.
+
+
+def host_cpus() -> int:
+    """CPUs this process may run on: the default N of local[N]."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_half_mem() -> str:
+    """Half of physical RAM as a Spark memory string: the default driver
+    heap (local mode runs every executor inside the driver JVM)."""
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    return f"{half >> 20}m"
 
 
 # --- host-health probes (shared with bench_scaling.py) -----------------------
@@ -283,7 +300,7 @@ def run_suite(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus()))
     n_convs = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "300000"))
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_QUERY_REPS", "3"))
     pipe_reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PIPE_REPS", "4")))
@@ -295,7 +312,9 @@ def main() -> None:
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g"))
+        .config(
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", host_half_mem())
+        )
         .config("spark.ui.enabled", "false")
         .appName("jsonschema-infer-spark-bench")
         .getOrCreate()

@@ -45,6 +45,7 @@ PAIRS = [(1, 4), (2, 8), (4, 16), (8, 32)]
 from bench import (  # noqa: E402
     _burn,
     cpu_burn_secs,  # noqa: F401 (re-exported for callers/tests)
+    host_half_mem,
     memcpy_gbps,  # noqa: F401
     parallel_memcpy_gbps,
     probe_health,
@@ -170,16 +171,17 @@ def run(master: str, data: str, out: str, mem: str) -> dict:
 
 def main():
     n_convs = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "5000000"))
-    mem = os.environ.get("SPARK_GRAFT_MEM", "48g")
+    mem = os.environ.get("SPARK_GRAFT_MEM", host_half_mem())
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
     from bench import ensure_bench_transcripts
 
     data = ensure_bench_transcripts(n_convs)
     os.makedirs(os.path.join(REPO, ".cache"), exist_ok=True)
     # Evidence lives in a GIT-TRACKED file: the first 70 rounds were kept
-    # only in .cache/ and a workspace reset wiped them (recovered by
-    # bench/reconstruct_evidence.py from the rendered report). Paired
-    # rounds are expensive host-window samples — they must survive resets.
+    # only in .cache/ and a workspace reset wiped them (they were
+    # reconstructed from the rendered report and lack stage/kernel-rate
+    # fields). Paired rounds are expensive host-window samples — they must
+    # survive resets.
     evid_path = os.path.join(REPO, "BENCH", "scale_evidence.json")
     legacy_path = os.path.join(REPO, ".cache", "scale_results.json")
     cached = None

@@ -10,7 +10,10 @@ for the state file BEFORE consuming its Arrow batches, so completed
 partitions cost an open, not a scan. The driver merges whatever states exist
 (the merge is associative — any subset is a valid partial result) and the
 manifest records lineage: input files, partition count, config fingerprint,
-per-partition row counts and timings.
+per-partition row counts and timings. Each input file is recorded as
+``[path, size, mtime_ns]``, and a resume whose files differ in any of the
+three is refused: states folded from a file's old bytes must not be merged
+with states folded from its new ones.
 
 This improves on the reference's ``Load`` resume (jsonschema.go:178-209),
 which reconstructs lossy synthetic counts from the OUTPUT schema; we
@@ -47,11 +50,11 @@ from .config import InferConfig, default_config
 from .operators import state as S
 from .operators.infer_spark import (
     InferResult,
+    check_fold_mode,
     fold_batches_columnar,
     fold_batches_json,
     merge_states,
 )
-from .plans.render import render_schema
 
 MANIFEST = "manifest.json"
 STATES = "states"
@@ -83,6 +86,41 @@ def _state_path(ckpt: str, pid: int) -> str:
     return os.path.join(ckpt, STATES, f"state_{pid:06d}.json")
 
 
+def _input_identity(paths) -> list:
+    """``[path, size, mtime_ns]`` per input file, sorted: what a resume
+    compares with the manifest. ``file:`` URIs (``DataFrame.inputFiles()``
+    returns them) are reduced to local paths; other schemes raise
+    ValueError, because their files cannot be checked here."""
+    from urllib.parse import unquote, urlparse
+
+    out = []
+    for p in paths:
+        u = urlparse(p)
+        if u.scheme == "file":
+            p = unquote(u.path)
+        elif u.scheme:
+            raise ValueError(
+                f"checkpointed runs need local input files, got {p}"
+            )
+        st = os.stat(p)
+        out.append([p, st.st_size, st.st_mtime_ns])
+    return sorted(out)
+
+
+def _check_manifest(mpath: str, fp: str, inputs: list) -> None:
+    """Refuse to resume a checkpoint written for another config or for
+    input files that have since changed."""
+    if not os.path.exists(mpath):
+        return
+    with open(mpath) as f:
+        prev = json.load(f)
+    if prev["config_fingerprint"] != fp or prev["input_files"] != inputs:
+        raise ValueError(
+            "checkpoint manifest does not match this input/config; "
+            "use a fresh checkpoint_dir"
+        )
+
+
 def _atomic_write(path: str, payload: str) -> None:
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
@@ -104,6 +142,7 @@ def infer_with_checkpoint(
     have no state yet (e.g. a simulated failure) — rerunning with the same
     checkpoint_dir folds only the missing ones."""
     config = config or default_config()
+    check_fold_mode(mode, json_column)
     if config.examples and not order_cols:
         raise NotImplementedError(
             "examples capture needs a total order: pass order_cols=[...]"
@@ -113,19 +152,11 @@ def infer_with_checkpoint(
 
     os.makedirs(os.path.join(checkpoint_dir, STATES), exist_ok=True)
     fp = config_fingerprint(config, mode, json_column, order_cols)
-    input_files = sorted(df.inputFiles())
+    input_files = _input_identity(df.inputFiles())
     n_parts = df.rdd.getNumPartitions()
 
     mpath = os.path.join(checkpoint_dir, MANIFEST)
-    prev = None
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            prev = json.load(f)
-        if prev["config_fingerprint"] != fp or prev["input_files"] != input_files:
-            raise ValueError(
-                "checkpoint manifest does not match this input/config; "
-                "use a fresh checkpoint_dir"
-            )
+    _check_manifest(mpath, fp, input_files)
 
     skip = set(_skip_partitions or ())
     ckpt = checkpoint_dir
@@ -177,16 +208,9 @@ def infer_with_checkpoint(
         states.append(S.state_from_jsonable(rec["state"]))
         partitions.append((rec["pid"], rec["rows"], rec["secs"]))
 
-    merged = merge_states(states)
-    schema = S.finalize(merged, config)
-    result = InferResult(
-        state=merged,
-        config=config,
-        schema=schema,
-        schema_json=render_schema(schema, config.indent),
-        total_rows=sum(p[1] for p in partitions),
-        partitions=partitions,
-        wall_secs=time.time() - t0,
+    result = InferResult.finalize(
+        merge_states(states), config, sum(p[1] for p in partitions),
+        partitions, t0,
     )
 
     manifest = {
@@ -250,9 +274,14 @@ def fused_with_checkpoint(
     (associative merges on both sides).
 
     Returns (InferResult | None, integrity dict | None, manifest) —
-    the results are None only when no task has completed yet."""
-    from .operators.infer_spark import _list_rg_tasks, list_parquet_files
-    from .operators.pipeline import _fused_task
+    the results are None only when no task has completed yet. A
+    hive-partitioned ``path`` raises ValueError, as in the direct
+    pipeline."""
+    from .operators.pipeline import (
+        _fused_task,
+        _list_rg_tasks,
+        native_parquet_files,
+    )
     from .operators.validate import _merge_partial_blobs
 
     config = config or default_config()
@@ -267,8 +296,9 @@ def fused_with_checkpoint(
             "path; use infer_with_checkpoint(order_cols=...) or the "
             "direct pipeline"
         )
-    files = list_parquet_files(path)
+    files = native_parquet_files(path)
     tasks = _list_rg_tasks(files, rg_per_task)
+    input_files = _input_identity(files)
     fp = config_fingerprint(
         config,
         f"fused:v{FUSED_STATE_VERSION}:{conv_col}:{idx_col}:{rg_per_task}",
@@ -281,14 +311,7 @@ def fused_with_checkpoint(
     os.makedirs(integ_dir, exist_ok=True)
 
     mpath = os.path.join(checkpoint_dir, MANIFEST)
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            prev = json.load(f)
-        if prev["config_fingerprint"] != fp or prev["input_files"] != sorted(files):
-            raise ValueError(
-                "checkpoint manifest does not match this input/config; "
-                "use a fresh checkpoint_dir"
-            )
+    _check_manifest(mpath, fp, input_files)
 
     skip = set(_skip_tasks or ())
     ckpt = checkpoint_dir
@@ -349,23 +372,16 @@ def fused_with_checkpoint(
 
     result = integ = None
     if states:
-        merged = merge_states(states)
-        schema = S.finalize(merged, config)
-        result = InferResult(
-            state=merged,
-            config=config,
-            schema=schema,
-            schema_json=render_schema(schema, config.indent),
-            total_rows=sum(p[1] for p in partitions),
-            partitions=partitions,
-            wall_secs=time.time() - t0,
+        result = InferResult.finalize(
+            merge_states(states), config, sum(p[1] for p in partitions),
+            partitions, t0,
         )
         integ = _merge_partial_blobs(partials)
 
     manifest = {
         "config_fingerprint": fp,
         "mode": "fused",
-        "input_files": sorted(files),
+        "input_files": input_files,
         "num_tasks": len(tasks),
         "completed_tasks": sorted(p[0] for p in partitions),
         "complete": len(partitions) >= len(tasks),

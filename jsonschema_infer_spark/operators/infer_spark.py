@@ -61,6 +61,22 @@ class InferResult:
     def render(self) -> str:
         return self.schema_json
 
+    @classmethod
+    def finalize(cls, merged: dict, config: InferConfig, total_rows: int,
+                 partitions: list, t0: float) -> "InferResult":
+        """Finalize a merged state and render it; ``t0`` is the run's
+        ``time.time()`` start."""
+        schema = S.finalize(merged, config)
+        return cls(
+            state=merged,
+            config=config,
+            schema=schema,
+            schema_json=render_schema(schema, config.indent),
+            total_rows=total_rows,
+            partitions=partitions,
+            wall_secs=time.time() - t0,
+        )
+
 
 def _render_ts_us(us: int) -> str:
     """RFC 3339 rendering of epoch-microseconds, fractional part trimmed —
@@ -306,8 +322,6 @@ def _eliminate_formats(st: dict, values: pa.Array, config: InferConfig) -> None:
         if f is None:
             continue
         if pds is None:
-            import pandas as pd
-
             pds = values.to_pandas().astype(object)
         vec = f.vectorized
         ok = vec(pds) if vec is not None else pds.map(f.detector)
@@ -685,127 +699,13 @@ def list_parquet_files(path: str) -> list:
     return [path]
 
 
-def _list_rg_tasks(paths: list, rg_per_task: int) -> list:
-    """(file, row_group_lo, row_group_hi) work units — the same split
-    granularity a native parquet reader schedules."""
-    import pyarrow.parquet as pq
-
-    tasks = []
-    for f in paths:
-        n = pq.ParquetFile(f).metadata.num_row_groups
-        for i in range(0, max(n, 1), rg_per_task):
-            tasks.append((f, i, min(i + rg_per_task, n)))
-    return tasks
-
-
-def infer_parquet(
-    spark,
-    path: str,
-    config: InferConfig | None = None,
-    mode: str = "columnar",
-    json_column: str | None = None,
-    rg_per_task: int = 4,
-    order_cols: list | None = None,
-) -> InferResult:
-    """Distributed inference reading parquet DIRECTLY in python tasks.
-
-    ``mapInArrow`` pays Spark's columnar->row->arrow double conversion on
-    every row (measured 27s vs 6.4s single-core on a 10.4M-row table);
-    since inference observes whole columns with no predicate to push down,
-    the idiomatic fix is the native-reader pattern: schedule (file,
-    row-group-range) splits as Spark tasks and let each task run the
-    vectorized fold straight off the (memory-mapped, column-pruned-free)
-    pyarrow scan. Results are value-identical to infer_dataframe — the
-    fold and merge are the same code; tests byte-compare.
-
-    Executors must see the files (posix path or shared FS). For Iceberg
-    tables use infer_dataframe on the catalog read instead.
-
-    ``max_samples`` caps rows deterministically in (file, row-group, row)
-    order; ``order_cols`` enables distributed examples capture exactly as
-    in infer_dataframe."""
-    config = config or default_config()
-    if config.examples and not order_cols:
-        raise NotImplementedError(
-            "examples capture needs a total order in distributed mode: pass "
-            "order_cols=[...] (e.g. ['conv_id', 'turn_idx'])"
-        )
+def check_fold_mode(mode: str, json_column) -> None:
+    """Refuse a fold mode other than the two this module implements, so a
+    misspelt or retired mode fails instead of running the columnar fold."""
+    if mode not in ("columnar", "json"):
+        raise ValueError(f"mode must be 'columnar' or 'json', got {mode!r}")
     if mode == "json" and not json_column:
         raise ValueError("json mode requires json_column")
-
-    t0 = time.time()
-    tasks = _list_rg_tasks(list_parquet_files(path), rg_per_task)
-
-    # max_samples (options.go:50-54): a deterministic ROW budget in (file,
-    # row-group, row) order — the native reader's stable total order, the
-    # same determinism infer_dataframe gets from a pushed-down limit. Tasks
-    # beyond the cap are dropped before scheduling (partition pruning).
-    if config.max_samples > 0:
-        import pyarrow.parquet as pq
-
-        remaining = config.max_samples
-        budgeted = []
-        meta_cache: dict = {}
-        for f, lo, hi in tasks:
-            if remaining <= 0:
-                break
-            md = meta_cache.get(f)
-            if md is None:
-                md = meta_cache[f] = pq.ParquetFile(f).metadata
-            in_task = sum(md.row_group(i).num_rows for i in range(lo, hi))
-            take = min(in_task, remaining)
-            budgeted.append((f, lo, hi, take))
-            remaining -= take
-        tasks = budgeted
-    else:
-        tasks = [(f, lo, hi, None) for f, lo, hi in tasks]
-
-    def fold_task(spec):
-        import pyarrow.parquet as pq
-
-        f, lo, hi, take = spec
-        pf = pq.ParquetFile(f)
-        rgs = list(range(lo, hi)) if hi > lo else []
-        batches = pf.iter_batches(batch_size=10_000, row_groups=rgs)
-        if take is not None:
-            def limited(bs, cap=take):
-                got = 0
-                for b in bs:
-                    if got >= cap:
-                        return
-                    if got + b.num_rows > cap:
-                        b = b.slice(0, cap - got)
-                    got += b.num_rows
-                    yield b
-
-            batches = limited(batches)
-        if mode == "json":
-            st, rows = fold_batches_json(batches, config, json_column, order_cols)
-        else:
-            st, rows = fold_batches_columnar(batches, config, order_cols)
-        return st, rows
-
-    rdd = spark.sparkContext.parallelize(tasks, max(len(tasks), 1)).map(fold_task)
-    if len(tasks) > _TREE_REDUCE_THRESHOLD:
-        depth = max(2, int(math.ceil(math.log(max(len(tasks), 2), 64))))
-        merged, total_rows = rdd.treeReduce(
-            lambda a, b: (S.merge(a[0], b[0]), a[1] + b[1]), depth=depth
-        )
-    else:
-        pairs = rdd.collect()
-        merged = merge_states([p[0] for p in pairs])
-        total_rows = sum(p[1] for p in pairs)
-
-    schema = S.finalize(merged, config)
-    return InferResult(
-        state=merged,
-        config=config,
-        schema=schema,
-        schema_json=render_schema(schema, config.indent),
-        total_rows=total_rows,
-        partitions=[(i, 0, 0.0) for i in range(len(tasks))],
-        wall_secs=time.time() - t0,
-    )
 
 
 def merge_states(states: list) -> dict:
@@ -821,7 +721,6 @@ def infer_dataframe(
     mode: str = "columnar",
     json_column: str | None = None,
     num_partitions: int | None = None,
-    sample_rows: int | None = None,
     order_cols: list | None = None,
 ) -> InferResult:
     """Run distributed inference over ``df`` and finalize on the driver.
@@ -834,32 +733,18 @@ def infer_dataframe(
     'turn_idx']) and every node's example is the value at the minimal key
     — byte-equal to a sequential fold over order-sorted rows under any
     partitioning (tests assert; merge keeps the min key, state.py).
+
+    ``mode`` is ``"columnar"`` or ``"json"``; any other value raises
+    ValueError.
     """
     config = config or default_config()
+    check_fold_mode(mode, json_column)
     if config.examples and not order_cols:
         raise NotImplementedError(
             "examples capture needs a total order in distributed mode: pass "
             "order_cols=[...] (e.g. ['conv_id', 'turn_idx']), or use the "
             "local SchemaInferrer (SURVEY.md §2.4)"
         )
-    if mode == "json" and not json_column:
-        raise ValueError("json mode requires json_column")
-    if mode in ("adaptive", "auto"):
-        from .infer_adaptive import (
-            _SAMPLE_ROWS,
-            adaptive_applicable,
-            infer_dataframe_adaptive,
-        )
-
-        if adaptive_applicable(df, config):
-            return infer_dataframe_adaptive(
-                df, config, sample_rows=sample_rows or _SAMPLE_ROWS
-            )
-        if mode == "adaptive":
-            raise ValueError(
-                "adaptive inference not applicable to this DataFrame/config"
-            )
-        mode = "columnar"
 
     t0 = time.time()
     if config.max_samples > 0:
@@ -889,13 +774,4 @@ def infer_dataframe(
         )
         total_rows = sum(r.rows for r in rows)
 
-    schema = S.finalize(merged, config)
-    return InferResult(
-        state=merged,
-        config=config,
-        schema=schema,
-        schema_json=render_schema(schema, config.indent),
-        total_rows=total_rows,
-        partitions=partitions,
-        wall_secs=time.time() - t0,
-    )
+    return InferResult.finalize(merged, config, total_rows, partitions, t0)

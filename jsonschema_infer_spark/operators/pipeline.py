@@ -3,11 +3,12 @@ a SINGLE native parquet scan.
 
 The north_rule pipeline is infer -> compile -> validate. Composed from the
 standalone operators it scans the table twice before validation: once for
-the inference fold (`infer_parquet`) and once for the integrity fold
-(`validate.transcript_integrity_parquet`). Both folds are per-partition
-pre-aggregations over the same rows — the classic multi-aggregate fusion a
-100 TB job cannot afford to skip, since the second scan is the same IO (and
-on a single disk, the same wall-clock) all over again.
+the inference fold (`infer_spark.infer_dataframe`) and once for the
+integrity fold (`validate.transcript_integrity_summary`). Both folds are
+per-partition pre-aggregations over the same rows — the classic
+multi-aggregate fusion a 100 TB job cannot afford to skip, since the second
+scan is the same IO (and on a single disk, the same wall-clock) all over
+again.
 
 Here each (file, row-group-range) task iterates its Arrow batches ONCE:
 
@@ -27,9 +28,15 @@ bounded by ``spark.driver.maxResultSize`` (Spark fails the job loudly
 beyond it); past that bound use `validate.transcript_integrity_summary`,
 whose reduce is a shuffle.
 
-Results are identical to running `infer_parquet` and
-`transcript_integrity_summary` separately — the folds are the same code;
-tests assert equality on clean, violated and shuffled tables.
+Results are identical to running `infer_dataframe` over Spark's parquet
+reader and `transcript_integrity_summary` separately — the folds are the
+same code; tests assert equality on clean, violated and shuffled tables.
+
+The scan reads the data files with pyarrow, so it sees only the columns
+stored in them. A hive-partitioned table (``key=value`` directories) keeps
+a column in its directory names, which this scan cannot see; every entry
+point here refuses such a table (`native_parquet_files`) rather than infer
+a schema without that column.
 
 Reference anchor: the sequential equivalent is AddSample folding each
 document once (`/root/reference/jsonschema.go:57-92`); validation is the
@@ -52,12 +59,46 @@ from ..operators import state as S
 from .infer_spark import (
     InferResult,
     _TREE_REDUCE_THRESHOLD,
-    _list_rg_tasks,
     fold_batches_columnar,
     list_parquet_files,
 )
 from .validate import _integrity_fold, _ipc_ser, _merge_partial_blobs
-from ..plans.render import render_schema
+
+
+def native_parquet_files(path: str) -> list:
+    """`list_parquet_files` for the native (pyarrow) scan, which reads only
+    the columns stored in the files. Raises ValueError when a data file
+    sits under a ``key=value`` directory below ``path``: Spark's reader
+    turns that directory level into a partition column, and a native scan
+    would silently infer a schema without it."""
+    files = list_parquet_files(path)
+    if os.path.isdir(path):
+        for f in files:
+            rel = os.path.relpath(os.path.dirname(f), path)
+            for part in rel.split(os.sep):
+                key, eq, _ = part.partition("=")
+                if eq and key:
+                    raise ValueError(
+                        f"{path} is hive-partitioned on column {key!r} "
+                        f"({f}); the native parquet scan cannot see "
+                        "partition columns. Use "
+                        "infer_dataframe(spark.read.parquet(path)) and "
+                        "transcript_integrity_summary instead"
+                    )
+    return files
+
+
+def _list_rg_tasks(paths: list, rg_per_task: int) -> list:
+    """(file, row_group_lo, row_group_hi) work units — the same split
+    granularity a native parquet reader schedules."""
+    import pyarrow.parquet as pq
+
+    tasks = []
+    for f in paths:
+        n = pq.ParquetFile(f).metadata.num_row_groups
+        for i in range(0, max(n, 1), rg_per_task):
+            tasks.append((f, i, min(i + rg_per_task, n)))
+    return tasks
 
 
 def _partial_path(out_dir: str, i: int) -> str:
@@ -103,8 +144,6 @@ def _fused_task(
     if violation_spec is not None:
         vnames, counter = arrow_violation_counter(violation_spec, pf.schema_arrow)
     vcounts = np.zeros(len(vnames), dtype=np.int64)
-    # batch_size matches infer_parquet so the inference fold sees the
-    # exact same batch boundaries (value-identical partials)
     batches = pf.iter_batches(batch_size=10_000, row_groups=list(range(lo, hi)))
     kept: list = []
     ns = pf.schema_arrow.names
@@ -153,9 +192,10 @@ def infer_and_integrity_parquet(
     violation_spec: list | None = None,
 ) -> tuple:
     """Fused scan: returns ``(InferResult, integrity_dict)`` where the
-    InferResult equals ``infer_parquet(spark, path, config, ...)`` and the
-    dict equals ``transcript_integrity_summary`` over the same files — one
-    data pass instead of two.
+    InferResult's schema equals ``infer_dataframe(spark.read.parquet(path),
+    config, ...)`` and the dict equals ``transcript_integrity_summary`` over
+    the same files — one data pass instead of two. A hive-partitioned
+    ``path`` raises ValueError (`native_parquet_files`).
 
     ``violation_spec`` (a validate.constraint_spec plan, typically the
     prewarm's PREDICTION from row-group 0) adds row-violation counting to
@@ -181,15 +221,15 @@ def infer_and_integrity_parquet(
 
     ``max_samples`` is not supported here (a row budget caps inference but
     integrity must still see every row — the two folds would need
-    different scans, defeating the fusion); use the standalone operators
-    for that configuration."""
+    different scans, defeating the fusion); use `infer_dataframe` and
+    `transcript_integrity_summary` for that configuration."""
     if integrity not in ("eager", "background"):
         raise ValueError(f"integrity must be 'eager' or 'background', got {integrity!r}")
     config = config or default_config()
     if config.max_samples > 0:
         raise ValueError(
             "max_samples caps the inference scan but integrity must see "
-            "every row; run infer_parquet + transcript_integrity_parquet "
+            "every row; run infer_dataframe + transcript_integrity_summary "
             "separately for capped inference"
         )
     if config.examples and not order_cols:
@@ -198,7 +238,7 @@ def infer_and_integrity_parquet(
             "order_cols=[...] (e.g. ['conv_id', 'turn_idx'])"
         )
     t0 = time.time()
-    tasks = _list_rg_tasks(list_parquet_files(path), rg_per_task)
+    tasks = _list_rg_tasks(native_parquet_files(path), rg_per_task)
 
     vnames: list = []
     if violation_spec is not None:
@@ -228,15 +268,8 @@ def infer_and_integrity_parquet(
             _combine, rdd.collect()
         )
 
-    schema = S.finalize(merged, config)
-    res = InferResult(
-        state=merged,
-        config=config,
-        schema=schema,
-        schema_json=render_schema(schema, config.indent),
-        total_rows=total_rows,
-        partitions=[(i, 0, 0.0) for i in range(len(tasks))],
-        wall_secs=time.time() - t0,
+    res = InferResult.finalize(
+        merged, config, total_rows, [(i, 0, 0.0) for i in range(len(tasks))], t0
     )
     if integrity == "background":
         from concurrent.futures import ThreadPoolExecutor
@@ -260,14 +293,15 @@ def predict_constraint_spec(
     prediction BEFORE launching the scan so the scan itself can count
     violations against it (infer_and_integrity_parquet's
     ``violation_spec``); pass the result to ValidationPrewarm(spec=...)
-    so the background codegen warm doesn't refold the sample."""
+    so the background codegen warm doesn't refold the sample. A
+    hive-partitioned ``path`` raises ValueError (`native_parquet_files`)."""
     import pyarrow.parquet as pq
     import pyarrow.types as pt
 
     from . import validate as V
 
     config = config or default_config()
-    f = list_parquet_files(path)[0]
+    f = native_parquet_files(path)[0]
     pf = pq.ParquetFile(f)
     batches = pf.iter_batches(batch_size=10_000, row_groups=[0])
     st, _ = fold_batches_columnar(batches, config, None)
@@ -314,6 +348,9 @@ class ValidationPrewarm:
 
     On a real cluster this is free driver hardware; on the one-bus bench
     VM its footprint is ~0.3 s of driver CPU against a multi-second scan.
+
+    A hive-partitioned ``path`` raises ValueError here, before the thread
+    starts (`native_parquet_files`).
     """
 
     def __init__(self, spark, path: str, config: InferConfig | None = None,
@@ -322,6 +359,7 @@ class ValidationPrewarm:
 
         self._spark = spark
         self._path = path
+        self._file = native_parquet_files(path)[0]
         self._config = config or default_config()
         self._enum_max = enum_max
         self.spec = spec  # precomputed prediction (predict_constraint_spec)
@@ -345,8 +383,7 @@ class ValidationPrewarm:
                 self.spec = predict_constraint_spec(
                     self._path, self._config, self._enum_max
                 )
-            f = list_parquet_files(self._path)[0]
-            pf = pq.ParquetFile(f)
+            pf = pq.ParquetFile(self._file)
             cons = V.build_constraints(self.spec)
             # one-row twin: same arrow schema -> same Spark scan schema ->
             # identical generated source for the agg plan

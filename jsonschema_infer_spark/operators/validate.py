@@ -22,9 +22,7 @@ Check taxonomy (SURVEY.md §2.5):
 
 from __future__ import annotations
 
-import re
 import threading
-import time
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -881,17 +879,15 @@ def _merge_partials_local(table) -> dict:
     ~10 s serial stage that capped measured scaling — Amdahl, not the
     host (kernel controls never saw it: they time the map side only).
     Multi-task detection is keyed on the partials' ``ch`` int64 conv hash
-    when present (one int64 sort + searchsorted, ~0.4 s at 5M partials;
-    hash collisions only route extra rows into the exact path below,
-    which unions by the true conv strings — results are collision-proof).
-    Tables without ``ch`` (hand-built partials) fall back
-    to two string hash passes (value_counts + is_in, ~3.4 s at 5M). The
-    string and list columns are never chunk-combined for the single-task
-    majority — only the multi subset is gathered."""
+    (one C hash pass, ~0.4 s at 5M partials; hash collisions only route
+    extra rows into the exact path below, which unions by the true conv
+    strings — results are collision-proof). ``table`` is
+    `_integrity_fold` output, which always carries ``ch`` and ``ndl``.
+    The string and list columns are never chunk-combined for the
+    single-task majority — only the multi subset is gathered."""
     import numpy as np
-
+    import pandas as pd
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     if table.num_rows == 0:
         return {"dup_rows_excess": 0, "ordering_violations": 0}
@@ -901,38 +897,12 @@ def _merge_partials_local(table) -> dict:
     n = table.column("n").to_numpy(zero_copy_only=False)
     mn_r = table.column("mn").to_numpy(zero_copy_only=False)
     mx_r = table.column("mx").to_numpy(zero_copy_only=False)
-    if "ndl" in table.schema.names:
-        ndl = table.column("ndl").to_numpy(zero_copy_only=False)
-    else:
-        ndl = np.diff(
-            table.column("turns").combine_chunks().offsets.to_numpy()
-        )
-
-    # ch fast path only when the column is null-free: partials mixing
-    # tables with and without ch unify to a ch column with nulls, whose
-    # to_numpy gives float64 NaNs — and pandas duplicated() treats all
-    # NaNs as duplicates, silently routing every such row through the
-    # slow exact-multi path. null_count is a metadata read.
-    if "ch" in table.schema.names and table.column("ch").null_count == 0:
-        import pandas as _pd
-
-        ch = table.column("ch").to_numpy(zero_copy_only=False)
-        # one C hash pass marks every row whose conv hash repeats
-        # (Series, not Index: Index.duplicated pays a second full
-        # is_unique hash pass; np.sort+searchsorted measured 0.76 s)
-        multi = _pd.Series(ch).duplicated(keep=False).to_numpy()
-    else:
-        conv_all = table.column("conv").combine_chunks()
-        vc = pc.value_counts(conv_all)
-        dup_vals = vc.field("values").filter(
-            pc.greater(vc.field("counts"), 1)
-        )
-        if len(dup_vals):
-            multi = pc.is_in(conv_all, value_set=dup_vals).to_numpy(
-                zero_copy_only=False
-            )
-        else:
-            multi = np.zeros(len(n), dtype=bool)
+    ndl = table.column("ndl").to_numpy(zero_copy_only=False)
+    # one C hash pass marks every row whose conv hash repeats (Series,
+    # not Index: Index.duplicated pays a second full is_unique hash pass;
+    # np.sort+searchsorted measured 0.76 s)
+    ch = table.column("ch").to_numpy(zero_copy_only=False)
+    multi = pd.Series(ch).duplicated(keep=False).to_numpy()
 
     # Single-part convs: the row is the conv. Dense 0..n-1 ordering holds
     # iff mn == 0, mx == distinct-1, and no duplicate turn values.
@@ -1023,68 +993,14 @@ def _ipc_deser(buf: bytes):
 def _merge_partial_blobs(blobs) -> dict:
     """Driver merge of per-task integrity partials shipped as Arrow IPC
     bytes (`_ipc_ser` of an `_integrity_fold` output; ``b""`` is a task
-    that saw no non-null keys). Shared by the fused pipeline, its
-    checkpointed form and transcript_integrity_parquet."""
+    that saw no non-null keys). Shared by the fused pipeline and its
+    checkpointed form."""
     import pyarrow as pa
 
     tables = [_ipc_deser(b) for b in blobs if b]
     if not tables:
         return {"dup_rows_excess": 0, "ordering_violations": 0}
     return _merge_partials_local(pa.concat_tables(tables))
-
-
-def transcript_integrity_parquet(
-    spark,
-    path: str,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    rg_per_task: int = 4,
-) -> dict:
-    """transcript_integrity_summary via the native-reader pattern: tasks
-    read ONLY (conv, turn) from parquet row groups with pyarrow (skipping
-    Spark's columnar->row->arrow conversion), pre-aggregate per conv with
-    C++ hash_distinct, and return the partials as Arrow IPC bytes that the
-    driver merges. Identical result to transcript_integrity_summary on the
-    same data.
-
-    Trade: fastest wall-clock at LOW parallelism (47s vs 75s at 1 core on
-    30M rows) because the map side skips Spark's row pipeline, but the
-    driver merge is serial — at high core counts the fully-distributed
-    transcript_integrity_summary wins and scales (its reduce
-    parallelizes). Pick summary for clusters, this for small boxes."""
-    import pyarrow as pa
-
-    from .infer_spark import _list_rg_tasks, list_parquet_files
-
-    tasks = _list_rg_tasks(list_parquet_files(path), rg_per_task)
-    fold = _integrity_fold(conv_col, idx_col)
-
-    def run(spec):
-        import pyarrow.parquet as pq
-
-        f, lo, hi = spec
-        pf = pq.ParquetFile(f)
-        batches = pf.iter_batches(
-            batch_size=65536,
-            row_groups=list(range(lo, hi)),
-            columns=[conv_col, idx_col],
-        )
-
-        def plain(bs):
-            for b in bs:
-                cols = [
-                    c.cast(c.type.value_type)
-                    if pa.types.is_dictionary(c.type)
-                    else c
-                    for c in b.columns
-                ]
-                yield pa.RecordBatch.from_arrays(cols, names=b.schema.names)
-
-        out = list(fold(plain(batches)))
-        return _ipc_ser(pa.Table.from_batches(out)) if out else b""
-
-    blobs = spark.sparkContext.parallelize(tasks, max(len(tasks), 1)).map(run).collect()
-    return _merge_partial_blobs(blobs)
 
 
 def ts_regressions(

@@ -1,13 +1,21 @@
-"""Adaptive (JVM-agg + probe) inference must produce states and schemas
-value-identical to the classic arrow fold."""
+"""Hostile flat tables through the distributed columnar fold: NaN/inf,
+const and integral-float columns, all-null columns, format-shaped strings,
+small enums, fractional timestamps and doubles at the int64 edge.
+``infer_dataframe`` at 1 and 4 partitions must equal the sequential
+``SchemaInferrer`` oracle byte for byte, and the two partitionings must
+fold to the same state."""
 
 import math
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
-
+from hypothesis import HealthCheck, given, settings, strategies as hst
 from pyspark.sql import functions as F
 
 from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
+
+from test_spark_infer import SF, local_oracle_rows
 
 
 def _norm_state(st):
@@ -34,24 +42,69 @@ def _norm_state(st):
     return out
 
 
-def _assert_equivalent(df):
-    classic = infer_dataframe(df, num_partitions=4)
-    adaptive = infer_dataframe(df, mode="adaptive")
-    assert adaptive.schema_json == classic.schema_json
-    assert adaptive.total_rows == classic.total_rows
-    assert _norm_state(adaptive.state) == _norm_state(classic.state)
+def _infer_or_error(df, nparts):
+    """(result, None) or (None, error): a const NaN/inf column makes the
+    renderer raise, exactly like Go's json.Marshal."""
+    try:
+        return infer_dataframe(df, num_partitions=nparts), None
+    except ValueError as e:
+        return None, e
+
+
+def _oracle_or_error(table):
+    try:
+        return local_oracle_rows(table), None
+    except ValueError as e:
+        return None, e
+
+
+def assert_matches_oracle(df, table):
+    """``df`` (Spark) and ``table`` (Arrow, same rows) must infer the same
+    schema: distributed at 1 and 4 partitions vs the sequential oracle.
+    Build ``table`` with ``pa.Table.from_pylist``, not through pandas,
+    which turns NaN into null."""
+    want, want_err = _oracle_or_error(table)
+    got = {n: _infer_or_error(df, n) for n in (1, 4)}
+    for nparts, (res, err) in got.items():
+        assert (err is None) == (want_err is None), (nparts, err, want_err)
+        if res is not None:
+            assert res.schema_json == want, nparts
+            assert res.total_rows == table.num_rows
+    if got[1][0] is not None:
+        assert _norm_state(got[1][0].state) == _norm_state(got[4][0].state)
+
+
+def _assert_parquet_matches(spark, path):
+    assert_matches_oracle(spark.read.parquet(path), pq.read_table(path))
 
 
 def test_transcripts_clean(spark, tx_paths):
-    _assert_equivalent(spark.read.parquet(tx_paths["clean"]))
+    _assert_parquet_matches(spark, tx_paths["clean"])
 
 
 def test_transcripts_violated(spark, tx_paths):
-    _assert_equivalent(spark.read.parquet(tx_paths["viol"]))
+    _assert_parquet_matches(spark, tx_paths["viol"])
 
 
 def test_events_table(spark):
-    _assert_equivalent(spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
+    _assert_parquet_matches(spark, f"{SF}/events.parquet")
+
+
+_EDGE_SCHEMA = pa.schema(
+    [
+        ("id", pa.int64()),
+        ("c_int", pa.int64()),
+        ("c_float", pa.float64()),
+        ("with_nan", pa.float64()),
+        ("with_inf", pa.float64()),
+        ("uuid_col", pa.string()),
+        ("email_col", pa.string()),
+        ("texty", pa.string()),
+        ("nul", pa.string()),
+        ("flag", pa.bool_()),
+        ("enum3", pa.string()),
+    ]
+)
 
 
 def test_edge_columns(spark):
@@ -78,7 +131,10 @@ def test_edge_columns(spark):
         "uuid_col string, email_col string, texty string, nul string, "
         "flag boolean, enum3 string",
     )
-    _assert_equivalent(df)
+    table = pa.Table.from_pylist(
+        [dict(zip(_EDGE_SCHEMA.names, r)) for r in rows], schema=_EDGE_SCHEMA
+    )
+    assert_matches_oracle(df, table)
 
 
 def test_timestamp_fractions(spark):
@@ -93,28 +149,25 @@ def test_timestamp_fractions(spark):
         AS t(ts)
         """
     )
-    _assert_equivalent(df)
+    # the oracle reads naive UTC datetimes; Spark's Arrow export carries
+    # the session time zone
+    table = df.toArrow().cast(pa.schema([("ts", pa.timestamp("us"))]))
+    assert_matches_oracle(df, table)
 
 
-def test_infer_parquet_matches_mapinarrow(spark, tx_paths):
-    from jsonschema_infer_spark.operators.infer_spark import infer_parquet
+def test_adaptive_rejects_nested(spark, tmp_path):
+    """Only the columnar and json folds exist: any other mode, including
+    the retired "adaptive" and "auto", raises instead of quietly running
+    the columnar fold."""
+    from jsonschema_infer_spark.checkpoint import infer_with_checkpoint
 
-    for key in ("clean", "viol"):
-        path = tx_paths[key]
-        a = infer_parquet(spark, path, rg_per_task=1)
-        b = infer_dataframe(spark.read.parquet(path), num_partitions=4)
-        assert a.schema_json == b.schema_json
-        assert a.total_rows == b.total_rows
-        assert _norm_state(a.state) == _norm_state(b.state)
-
-
-def test_adaptive_rejects_nested(spark):
     df = spark.range(3).select(F.struct("id").alias("s"))
-    with pytest.raises(ValueError):
-        infer_dataframe(df, mode="adaptive")
-    # auto silently falls back
-    res = infer_dataframe(df, mode="auto")
-    assert res.total_rows == 3
+    for mode in ("adaptive", "auto", "Columnar"):
+        with pytest.raises(ValueError, match="mode must be"):
+            infer_dataframe(df, mode=mode)
+        with pytest.raises(ValueError, match="mode must be"):
+            infer_with_checkpoint(df, str(tmp_path / "ck"), mode=mode)
+    assert infer_dataframe(df).total_rows == 3
 
 
 def test_huge_double_demotion(spark):
@@ -129,7 +182,9 @@ def test_huge_double_demotion(spark):
         (2.5,),
     ]
     df = spark.createDataFrame(rows, "d double")
-    _assert_equivalent(df)
+    assert_matches_oracle(
+        df, pa.Table.from_pylist([{"d": r[0]} for r in rows])
+    )
     classic = infer_dataframe(df, num_partitions=2)
     st = classic.state["props"]["d"]
     assert st["types"] == {"number": 4, "integer": 2}
@@ -137,20 +192,6 @@ def test_huge_double_demotion(spark):
     assert tags[5] == "integer" and tags[2.5] == "number"
     assert tags[1e19] == "number" and tags[float(2**63)] == "number"
     assert tags[-(2**63)] == "integer"
-
-
-def test_ts_render_len_matches_actual_render(spark):
-    from jsonschema_infer_spark.operators.infer_adaptive import _ts_render_len
-    from jsonschema_infer_spark.operators.infer_spark import _render_ts_us
-
-    base = 1767225600 * 1_000_000
-    fracs = [0, 5, 10, 50, 100, 500, 5000, 50000, 100000, 120000, 123456,
-             500000, 999999, 999990]
-    us_vals = [base + f for f in fracs]
-    df = spark.createDataFrame([(v,) for v in us_vals], "us long")
-    got = [r.l for r in df.select(_ts_render_len(F.col("us")).alias("l")).collect()]
-    want = [len(_render_ts_us(v)) for v in us_vals]
-    assert got == want
 
 
 def test_timestamp_render_len_columnar(spark):
@@ -161,3 +202,47 @@ def test_timestamp_render_len_columnar(spark):
     st = res.state["props"]["ts"]
     assert st["const"] == ("string", "2026-01-01T00:00:00.5Z")
     assert st["len_min"] == st["len_max"] == len("2026-01-01T00:00:00.5Z")
+
+
+_strings = hst.one_of(
+    hst.text(alphabet="ab@. ", min_size=0, max_size=8),
+    hst.just("user@example.com"),
+    hst.just("550e8400-e29b-41d4-a716-446655440000"),
+    hst.just("x"),
+)
+_doubles = hst.one_of(
+    hst.just(float("nan")),
+    hst.just(float("inf")),
+    hst.just(2.0),
+    hst.floats(allow_nan=False, allow_infinity=False, width=32),
+)
+_rows = hst.lists(
+    hst.tuples(
+        hst.one_of(hst.none(), hst.integers(-(2**31), 2**31 - 1)),
+        hst.one_of(hst.none(), _doubles),
+        hst.one_of(hst.none(), _strings),
+        hst.one_of(hst.none(), hst.booleans()),
+    ),
+    min_size=1,
+    max_size=30,
+)
+_FUZZ_SCHEMA = pa.schema(
+    [("i", pa.int64()), ("d", pa.float64()), ("s", pa.string()),
+     ("b", pa.bool_())]
+)
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(rows=_rows)
+def test_columnar_matches_oracle_on_random_tables(spark, rows):
+    """Random flat tables (nulls, NaN/inf, near-const and format-shaped
+    strings): both partitionings equal the oracle, or all three raise."""
+    df = spark.createDataFrame(rows, "i long, d double, s string, b boolean")
+    table = pa.Table.from_pylist(
+        [dict(zip(_FUZZ_SCHEMA.names, r)) for r in rows], schema=_FUZZ_SCHEMA
+    )
+    assert_matches_oracle(df, table)

@@ -1,9 +1,10 @@
 """Fused one-pass pipeline == the standalone operators, value-identical.
 
 The fused scan (pipeline.infer_and_integrity_parquet) must return exactly
-the InferResult of infer_parquet AND the integrity dict of
-transcript_integrity_summary on the same files — the folds are shared code,
-so any divergence is a wiring bug in the tee."""
+the schema of infer_dataframe over Spark's own parquet reader AND the
+integrity dict of transcript_integrity_summary on the same files — the
+folds are shared code, so any divergence is a wiring bug in the tee or a
+difference between the native and the Spark reader."""
 
 import json
 import os
@@ -12,7 +13,7 @@ import pytest
 
 from jsonschema_infer_spark.config import default_config
 from jsonschema_infer_spark.operators import validate as V
-from jsonschema_infer_spark.operators.infer_spark import infer_parquet
+from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
 from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
 
 ZERO = {"dup_rows_excess": 0, "ordering_violations": 0}
@@ -44,8 +45,13 @@ def tables(tx_paths, tmp_path_factory):
     }
 
 
+def _spark_infer(spark, path, **kw):
+    """The reference schema: the mapInArrow fold over Spark's reader."""
+    return infer_dataframe(spark.read.parquet(path), **kw)
+
+
 def test_fused_matches_standalone_on_violated(spark, tx_paths):
-    want_infer = infer_parquet(spark, tx_paths["viol"], rg_per_task=1)
+    want_infer = _spark_infer(spark, tx_paths["viol"])
     want_integ = V.transcript_integrity_summary(spark.read.parquet(tx_paths["viol"]))
     res, integ = infer_and_integrity_parquet(
         spark, tx_paths["viol"], rg_per_task=1
@@ -56,7 +62,7 @@ def test_fused_matches_standalone_on_violated(spark, tx_paths):
 
 
 def test_fused_matches_standalone_on_clean(spark, tx_paths):
-    want_infer = infer_parquet(spark, tx_paths["clean"], rg_per_task=2)
+    want_infer = _spark_infer(spark, tx_paths["clean"])
     res, integ = infer_and_integrity_parquet(
         spark, tx_paths["clean"], rg_per_task=2
     )
@@ -87,9 +93,10 @@ def test_fused_background_integrity_matches_eager(spark, tx_paths):
 @pytest.mark.parametrize("branch", ["collect", "tree"])
 @pytest.mark.parametrize("table", ["clean", "viol", "shuffled"])
 def test_fused_integrity_equals_summary(spark, tables, table, branch, monkeypatch):
-    """Fused integrity is bit-equal to transcript_integrity_summary through
-    both result reduces, with and without in-scan violation counting; the
-    shuffled table makes most conversations span tasks."""
+    """Fused integrity is bit-equal to transcript_integrity_summary, and
+    the fused schema byte-equal to infer_dataframe over Spark's reader,
+    through both result reduces, with and without in-scan violation
+    counting; the shuffled table makes most conversations span tasks."""
     from jsonschema_infer_spark.operators import pipeline as P
 
     path = tables[table]
@@ -103,7 +110,9 @@ def test_fused_integrity_equals_summary(spark, tables, table, branch, monkeypatc
         spark, path, rg_per_task=1, violation_spec=pred
     )
     assert integ == integ2 == want
-    assert res.total_rows == res2.total_rows == spark.read.parquet(path).count()
+    ref = _spark_infer(spark, path)
+    assert res.schema_json == res2.schema_json == ref.schema_json
+    assert res.total_rows == res2.total_rows == ref.total_rows
     assert vcounts == _spark_truth(spark, path, pred)
 
 
@@ -129,11 +138,11 @@ def test_fused_distributed_reduce_matches(spark, tables, monkeypatch):
 
 def test_fused_examples_capture_matches(spark, tx_paths):
     cfg = default_config(examples=True)
-    want = infer_parquet(
+    want = _spark_infer(
         spark,
         tx_paths["viol"],
         config=cfg,
-        rg_per_task=1,
+        num_partitions=3,
         order_cols=["conv_id", "turn_idx"],
     )
     res, _ = infer_and_integrity_parquet(
@@ -286,6 +295,86 @@ def test_empty_input_directory_raises(spark, tmp_path):
             call()
 
 
+def write_small_transcript(path: str, turn_idx=None) -> str:
+    """32 rows, 8 conversations of 4 turns, in 4 row groups of 8 rows;
+    ``turn_idx`` replaces every turn index when given."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    convs = [f"c{i}" for i in range(8) for _ in range(4)]
+    turns = [t for _ in range(8) for t in range(4)]
+    if turn_idx is not None:
+        turns = [turn_idx] * len(turns)
+    t = pa.table(
+        {
+            "conv_id": convs,
+            "turn_idx": pa.array(turns, type=pa.int64()),
+            "text": [f"turn {i}" for i in range(32)],
+        }
+    )
+    pq.write_table(t, path, row_group_size=8)
+    return path
+
+
+def test_fused_checkpoint_refuses_input_rewritten_in_place(
+    spark, tmp_path
+):
+    """The manifest records each input file's size and mtime: a file
+    rewritten in place between a partial run and its resume is refused,
+    instead of merging states folded from the old bytes with the new."""
+    from jsonschema_infer_spark.checkpoint import fused_with_checkpoint
+
+    path = write_small_transcript(str(tmp_path / "t.parquet"))
+    ckpt = str(tmp_path / "ckpt")
+    _, integ, man = fused_with_checkpoint(
+        spark, path, ckpt, rg_per_task=1, _skip_tasks=[1]
+    )
+    assert integ == ZERO and not man["complete"]
+    write_small_transcript(path, turn_idx=0)
+    with pytest.raises(ValueError, match="does not match"):
+        fused_with_checkpoint(spark, path, ckpt, rg_per_task=1)
+    _, fresh, _ = fused_with_checkpoint(
+        spark, path, str(tmp_path / "fresh"), rg_per_task=1
+    )
+    assert fresh == {"dup_rows_excess": 24, "ordering_violations": 8}
+
+
+def test_native_scan_refuses_hive_partitions(spark, tmp_path):
+    """Spark's reader turns ``day=a/`` directories into a ``day`` column
+    that the native scan cannot see: every native entry point raises and
+    names the column, while the Spark-reader paths keep working."""
+    from jsonschema_infer_spark.checkpoint import fused_with_checkpoint
+    from jsonschema_infer_spark.operators.pipeline import (
+        ValidationPrewarm,
+        predict_constraint_spec,
+    )
+
+    root = tmp_path / "hive"
+    for day in ("a", "b"):
+        (root / f"day={day}").mkdir(parents=True)
+        write_small_transcript(str(root / f"day={day}" / "part.parquet"))
+    root = str(root)
+    calls = (
+        lambda: infer_and_integrity_parquet(spark, root),
+        lambda: fused_with_checkpoint(spark, root, str(tmp_path / "ck")),
+        lambda: predict_constraint_spec(root),
+        lambda: ValidationPrewarm(spark, root, spec=[]),
+    )
+    for call in calls:
+        with pytest.raises(ValueError, match="partitioned on column 'day'"):
+            call()
+
+    want = _spark_infer(spark, root)
+    assert sorted(want.schema["properties"]) == [
+        "conv_id", "day", "text", "turn_idx",
+    ]
+    assert V.transcript_integrity_summary(spark.read.parquet(root)) == {
+        "dup_rows_excess": 32, "ordering_violations": 8,
+    }
+    with V.validation_scan(spark, root) as vdf:
+        assert "day" in vdf.columns
+
+
 def test_validation_prewarm_hit_and_miss(spark, tx_paths):
     """ValidationPrewarm predicts the constraint spec from row-group 0:
     on the fixture (one row group) the prediction is exact -> the
@@ -393,7 +482,7 @@ def test_fused_violation_counts_match_spark(spark, tx_paths):
 
     # cross-table spec: clean table's constraints against the violated
     # table — must flag rows, and must match Spark exactly
-    clean_res = infer_parquet(spark, tx_paths["clean"], rg_per_task=2)
+    clean_res = _spark_infer(spark, tx_paths["clean"])
     cross = V.constraint_spec(
         clean_res.schema,
         state=clean_res.state,

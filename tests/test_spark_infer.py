@@ -2,7 +2,6 @@
 oracle under hostile partitionings (SURVEY.md §5.2 item 2 — the distributed
 analogue of the reference's concurrency tests jsonschema_test.go:775-885)."""
 
-import json
 from datetime import timezone
 
 import pyarrow.parquet as pq
@@ -87,20 +86,6 @@ def test_max_samples_limit(spark):
     df = spark.read.parquet(f"{SF}/events.parquet")
     res = infer_dataframe(df, config=default_config(max_samples=100))
     assert res.total_rows == 100
-
-
-def test_max_samples_native_reader(spark):
-    from jsonschema_infer_spark.config import default_config
-    from jsonschema_infer_spark.operators.infer_spark import infer_parquet
-
-    src = f"{SF}/events.parquet"
-    res = infer_parquet(
-        spark, src, config=default_config(max_samples=137), rg_per_task=1
-    )
-    assert res.total_rows == 137
-    # the native reader's total order IS (file, row-group, row): the capped
-    # result equals a sequential fold over the parquet head
-    assert res.schema_json == local_oracle_rows(pq.read_table(src).slice(0, 137))
 
 
 def test_examples_need_order_cols_in_distributed_mode(spark):
@@ -201,19 +186,6 @@ def test_examples_nested_hostile_partitioning(spark):
     assert props["extra"]["example"] == 1.5  # first OBSERVED (non-null) value
 
 
-def test_examples_parquet_native_matches(spark, tmp_path):
-    from jsonschema_infer_spark.config import default_config
-    from jsonschema_infer_spark.operators.infer_spark import infer_parquet
-
-    src = f"{SF}/events.parquet"
-    res = infer_parquet(
-        spark, src, config=default_config(examples=True),
-        order_cols=["event_id"], rg_per_task=1,
-    )
-    expected = local_oracle_sorted_examples(pq.read_table(src), ["event_id"])
-    assert res.schema_json == expected
-
-
 def test_checkpoint_resume(spark, tx_paths, tmp_path):
     from jsonschema_infer_spark.checkpoint import infer_with_checkpoint
 
@@ -236,6 +208,27 @@ def test_checkpoint_resume(spark, tx_paths, tmp_path):
 
     with pytest.raises(ValueError):
         infer_with_checkpoint(df, ck, config=default_config(schema_version=DRAFT06))
+
+
+def test_checkpoint_refuses_input_rewritten_in_place(spark, tmp_path):
+    """A complete checkpoint whose input file is later rewritten in place
+    (same name, new bytes) is refused on resume instead of returning the
+    schema of the old bytes."""
+    from jsonschema_infer_spark.checkpoint import infer_with_checkpoint
+
+    from test_pipeline_fused import write_small_transcript
+
+    path = write_small_transcript(str(tmp_path / "t.parquet"))
+    ck = str(tmp_path / "ck")
+    first, man = infer_with_checkpoint(spark.read.parquet(path), ck)
+    assert man["complete"]
+    assert first.state["props"]["turn_idx"]["num_max"] == 3
+    write_small_transcript(path, turn_idx=0)
+    df = spark.read.parquet(path)
+    with pytest.raises(ValueError, match="does not match"):
+        infer_with_checkpoint(df, ck)
+    fresh, _ = infer_with_checkpoint(df, str(tmp_path / "fresh"))
+    assert fresh.state["props"]["turn_idx"]["num_max"] == 0
 
 
 def test_nested_fold_row_form_matches_duckdb_recursive_oracle(spark):

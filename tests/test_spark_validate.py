@@ -90,16 +90,6 @@ def test_integrity_summary_matches_separate_operators(compiled):
     assert clean_summ == {"dup_rows_excess": 0, "ordering_violations": 0}
 
 
-def test_integrity_parquet_native_matches(spark, tx_paths):
-    viol = spark.read.parquet(tx_paths["viol"])
-    want = V.transcript_integrity_summary(viol)
-    assert V.transcript_integrity_parquet(
-        spark, tx_paths["viol"], rg_per_task=1
-    ) == want
-    clean = V.transcript_integrity_parquet(spark, tx_paths["clean"], rg_per_task=1)
-    assert clean == {"dup_rows_excess": 0, "ordering_violations": 0}
-
-
 def test_ts_regressions_match_injections(compiled):
     res, cons, clean, viol, log = compiled
     got_convs = {r.conv_id for r in V.ts_regressions(viol).collect()}
@@ -134,6 +124,19 @@ def test_partition_verdicts_deterministic(compiled):
     assert v1 == v2  # buckets are content-hash based, not physical partitions
 
 
+def _conv_hash(convs):
+    """The ``ch`` column `_integrity_fold` computes for these conv ids."""
+    import pandas as pd
+    import pyarrow as pa
+
+    return pa.array(
+        pd.util.hash_array(
+            pa.array(convs, pa.string()).to_numpy(zero_copy_only=False).astype(object)
+        ).view("int64"),
+        type=pa.int64(),
+    )
+
+
 def test_merge_partials_local_negative_turns():
     """Driver merge handles negative int32 turn indices in multi-part convs:
     the composite-key bias keeps the >>32 code recovery exact (an unbiased
@@ -146,6 +149,7 @@ def test_merge_partials_local_negative_turns():
     partials = pa.table(
         {
             "conv": ["a", "a", "b"],
+            "ch": _conv_hash(["a", "a", "b"]),
             "n": pa.array([3, 2, 2], type=pa.int64()),
             "mn": pa.array([-2, 0, 0], type=pa.int32()),
             "mx": pa.array([0, 1, 1], type=pa.int32()),
@@ -188,6 +192,7 @@ def test_merge_partials_local_two_tier_vs_bruteforce():
     partials = pa.table(
         {
             "conv": rows["conv"],
+            "ch": _conv_hash(rows["conv"]),
             "n": pa.array(rows["n"], type=pa.int64()),
             "mn": pa.array(rows["mn"], type=pa.int32()),
             "mx": pa.array(rows["mx"], type=pa.int32()),
@@ -311,17 +316,16 @@ def test_validation_scan_restores_confs_on_error(spark, tx_paths):
 
 
 def test_merge_partials_local_hash_path_and_collisions():
-    """The ``ch`` fast path equals the string fallback, and a hash
+    """Multi-task convs are found by the ``ch`` conv hash, and a hash
     COLLISION between two different convs only routes both through the
     exact string-keyed path — results unchanged (collision-proof by
     construction, not by hash quality)."""
     import pyarrow as pa
 
-    import pandas as pd
-
     # clean single-part conv "a"; dup single "b"; 2-part clean "c"
     data = {
         "conv": ["a", "b", "c", "c"],
+        "ch": _conv_hash(["a", "b", "c", "c"]),
         "n": pa.array([3, 4, 3, 3], type=pa.int64()),
         "mn": pa.array([0, 0, 0, 3], type=pa.int32()),
         "mx": pa.array([2, 2, 2, 5], type=pa.int32()),
@@ -331,33 +335,13 @@ def test_merge_partials_local_hash_path_and_collisions():
             type=pa.list_(pa.int32()),
         ),
     }
-    no_ch = pa.table(data)
-    want = V._merge_partials_local(no_ch)
-    assert want == {"dup_rows_excess": 1, "ordering_violations": 1}
-
-    real = pd.util.hash_array(
-        pa.array(data["conv"]).to_numpy(zero_copy_only=False).astype(object)
-    ).view("int64")
-    with_ch = no_ch.add_column(1, "ch", pa.array(real, type=pa.int64()))
-    assert V._merge_partials_local(with_ch) == want
+    want = {"dup_rows_excess": 1, "ordering_violations": 1}
+    assert V._merge_partials_local(pa.table(data)) == want
 
     # force a collision: single-part convs "a" and "b" share a hash ->
     # both take the exact path, keyed by their true conv strings
     collided = pa.table({**data, "ch": pa.array([7, 7, 9, 9], type=pa.int64())})
-    collided = collided.select(
-        ["conv", "ch", "n", "mn", "mx", "ndl", "turns"]
-    )
     assert V._merge_partials_local(collided) == want
-
-    # a resumed checkpoint mixing pre-ch part files with new ones unifies
-    # to a ch column WITH NULLS; the fast path must be skipped (float64
-    # NaNs make pandas duplicated() mark every legacy row a duplicate) and
-    # the string fallback must give identical counts
-    mixed = pa.table(
-        {**data, "ch": pa.array([real[0], None, real[2], real[3]],
-                                type=pa.int64())}
-    ).select(["conv", "ch", "n", "mn", "mx", "ndl", "turns"])
-    assert V._merge_partials_local(mixed) == want
 
 
 def test_task_partial_blobs_fuzz_vs_bruteforce():
