@@ -194,59 +194,22 @@ def ensure_bench_transcripts(n_convs: int, seed: int = 42) -> str:
 
 
 def run_transcript_pipeline(spark, path: str) -> dict:
-    """The headline pipeline: infer schema -> compile constraints ->
-    row validation + uniqueness + turn ordering, one timed end-to-end run."""
-    from jsonschema_infer_spark.operators import validate as V
-    from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
+    """The headline pipeline (`operators.pipeline.run`): infer schema ->
+    compile constraints -> row validation + uniqueness + turn ordering, one
+    timed end-to-end run."""
+    from jsonschema_infer_spark.operators.pipeline import run
 
-    df = spark.read.parquet(path)
-    # task granularity scaled to the cluster (same rule as bench/pipeline_job)
-    import pyarrow.parquet as pq
-
-    cores = spark.sparkContext.defaultParallelism
-    n_rg = pq.ParquetFile(path).num_row_groups
-    rg_per_task = max(1, min(4, n_rg // (cores * 6)))
     t0 = time.time()
-    # single-pass flow (same as bench/pipeline_job rev 6): predict the
-    # constraint spec from row-group 0, count violations against it inside
-    # the fused scan, confirm the prediction post-hoc; the classic
-    # prewarm+validation_scan path remains as the miss fallback
-    from jsonschema_infer_spark.operators.pipeline import (
-        ValidationPrewarm,
-        predict_constraint_spec,
-    )
-
-    pred_spec = predict_constraint_spec(path)
-    pw = ValidationPrewarm(spark, path, spec=pred_spec)
-    res, integ_fut, vcounts = infer_and_integrity_parquet(
-        spark,
-        path,
-        rg_per_task=rg_per_task,
-        integrity="background",
-        violation_spec=pred_spec,
-    )
-    real_spec = V.constraint_spec(
-        res.schema, state=res.state, temporal_cols=V.temporal_columns(df)
-    )
-    if frozenset(real_spec) == frozenset(pred_spec):
-        agg_counts = vcounts
-    else:
-        cons = pw.constraints_for(res.schema, res.state, df)
-        with V.validation_scan(spark, path) as vdf:
-            agg_counts = {
-                r.constraint: r.violation_count
-                for r in V.violation_counts(vdf, cons).collect()
-            }
-    integ = integ_fut.result()
+    r = run(spark, path)
     secs = time.time() - t0
-    rows = res.total_rows
+    rows = r.infer.total_rows
     return {
         "rows": rows,
         "secs": secs,
         "turns_per_sec": rows / secs,
-        "row_violations": int(sum(agg_counts.values())),
-        "dup_rows_excess": integ["dup_rows_excess"],
-        "ordering_violations": integ["ordering_violations"],
+        "row_violations": int(sum(r.violations.values())),
+        "dup_rows_excess": r.integrity["dup_rows_excess"],
+        "ordering_violations": r.integrity["ordering_violations"],
     }
 
 

@@ -9,7 +9,6 @@ Usage:
 
 import argparse
 import json
-import sys
 import time
 
 # bumped on every engine/config change that affects timings: bench_scaling
@@ -33,7 +32,9 @@ import time
 #         in rev 10).
 # rev 10 = integrity partials return with each fused task's result as
 #         Arrow IPC bytes; no spill directory.
-ENGINE_REV = 10
+# rev 11 = the flow is operators.pipeline.run; a hit now joins the prewarm
+#          inside the timed run.
+ENGINE_REV = 11
 
 
 def main():
@@ -61,8 +62,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
 
-    from jsonschema_infer_spark.operators import validate as V
-    from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
+    from jsonschema_infer_spark.operators.pipeline import run
 
     df = spark.read.parquet(args.data)
 
@@ -74,90 +74,25 @@ def main():
     warm = spark.range(0, cores * 4, 1, cores * 4)
     warm.mapInArrow(lambda it: it, "id long").count()
 
-    # task granularity scaled to the cluster: aim for >=6 waves of fused
-    # scan tasks per core so the last wave can't strand most of the cluster
-    # (233 row-groups at 4 rg/task = 59 tasks = 1.8 waves at 32 cores)
-    import pyarrow.parquet as pq
-
-    n_rg = pq.ParquetFile(args.data).num_row_groups
-    rg_per_task = max(1, min(4, n_rg // (cores * 6)))
-
-    from jsonschema_infer_spark.operators.pipeline import (
-        ValidationPrewarm,
-        predict_constraint_spec,
-    )
-
     t0 = time.time()
-    # predict the constraint spec from row-group 0 SYNCHRONOUSLY (pure
-    # pyarrow, ~0.3 s) — the fused scan below counts row violations
-    # against this prediction in the same pass; prewarm then compiles the
-    # Spark constraints + violations codegen on a driver thread purely as
-    # the MISS-path insurance (joined only if the prediction is wrong)
-    pred_spec = predict_constraint_spec(args.data)
-    pw = ValidationPrewarm(spark, args.data, spec=pred_spec)
-    # fused one-pass scan: inference fold + per-conv integrity partials +
-    # predicted-spec violation counts, all off the same native pyarrow
-    # row-group read (rev 2 removed the second integrity pass; rev 6
-    # removes the third violations pass on a spec hit).
-    # integrity="background" overlaps the driver-side partials reduce with
-    # whatever follows: on a real cluster the driver is separate hardware,
-    # so serializing that reduce before the next Spark job was a pure
-    # Amdahl term.
-    res, integ_fut, vcounts = infer_and_integrity_parquet(
-        spark,
-        args.data,
-        rg_per_task=rg_per_task,
-        integrity="background",
-        violation_spec=pred_spec,
-    )
-    t_fused = time.time() - t0
-    t = time.time()
-    real_spec = V.constraint_spec(
-        res.schema, state=res.state, temporal_cols=V.temporal_columns(df)
-    )
-    spec_hit = frozenset(real_spec) == frozenset(pred_spec)
-    t_compile = time.time() - t
-    t = time.time()
-    if spec_hit:
-        # the fused counts ARE the violations result for the real spec —
-        # no second scan at all
-        agg_counts = vcounts
-    else:
-        # miss: classic flow — prewarmed constraints (or fresh build) +
-        # tuned single-pass validation scan
-        cons = pw.constraints_for(res.schema, res.state, df)
-        with V.validation_scan(spark, args.data) as vdf:
-            agg_counts = {
-                r.constraint: r.violation_count
-                for r in V.violation_counts(vdf, cons).collect()
-            }
-    t_viol = time.time() - t
-    t = time.time()
-    integ = integ_fut.result()
-    t_integ_wait = time.time() - t
-    n_dup = integ["dup_rows_excess"]
-    n_ord = integ["ordering_violations"]
+    r = run(spark, args.data)
     secs = time.time() - t0
+    rows = r.infer.total_rows
 
     out = {
         "cores": cores,
         "engine_rev": ENGINE_REV,
-        "rows": res.total_rows,
+        "rows": rows,
         "secs": round(secs, 3),
-        "turns_per_sec": round(res.total_rows / secs, 1),
-        "row_violations": int(sum(agg_counts.values())),
-        "dup_rows_excess": n_dup,
-        "ordering_violations": n_ord,
-        "spec_hit": bool(spec_hit),
-        "prewarm_error": repr(pw.error) if pw.error is not None else None,
-        "stage_secs": {
-            "infer+integrity": round(t_fused, 2),
-            "compile": round(t_compile, 2),
-            "violations": round(t_viol, 2),
-            # residual wait for the backgrounded integrity reduce after
-            # the violations pass returned (0.0 = fully hidden)
-            "integrity_wait": round(t_integ_wait, 2),
-        },
+        "turns_per_sec": round(rows / secs, 1),
+        "row_violations": int(sum(r.violations.values())),
+        "dup_rows_excess": r.integrity["dup_rows_excess"],
+        "ordering_violations": r.integrity["ordering_violations"],
+        "spec_hit": r.spec_hit,
+        "prewarm_error": (
+            repr(r.prewarm_error) if r.prewarm_error is not None else None
+        ),
+        "stage_secs": {k: round(v, 2) for k, v in r.stage_secs.items()},
     }
     with open(args.out, "w") as f:
         json.dump(out, f)

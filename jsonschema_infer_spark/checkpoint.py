@@ -128,6 +128,23 @@ def _atomic_write(path: str, payload: str) -> None:
     os.replace(tmp, path)  # idempotent under task retries
 
 
+def _read_markers(states_dir: str) -> list:
+    """Every completion marker in ``states_dir`` in name order, as its JSON
+    record with ``state`` decoded. Only exact ``state_*.json`` names count:
+    a writer killed between the tmp write and os.replace leaves
+    ``state_*.json.tmp.<pid>`` behind, which must not be merged (double
+    count) nor crash the resume (torn JSON)."""
+    recs = []
+    for fn in sorted(os.listdir(states_dir)):
+        if not (fn.startswith("state_") and fn.endswith(".json")):
+            continue
+        with open(os.path.join(states_dir, fn)) as f:
+            rec = json.load(f)
+        rec["state"] = S.state_from_jsonable(rec["state"])
+        recs.append(rec)
+    return recs
+
+
 def infer_with_checkpoint(
     df,
     checkpoint_dir: str,
@@ -195,22 +212,11 @@ def infer_with_checkpoint(
         r.pid for r in df.mapInArrow(fold, "pid long").collect()
     ]
 
-    # driver: read every completed state from the manifest dir. Only
-    # exact "state_*.json" names count — a writer killed between the tmp
-    # write and os.replace leaves "state_*.json.tmp.<pid>" behind, which
-    # must not be merged (double-count) nor crash the resume (truncated)
-    states, partitions = [], []
-    for fn in sorted(os.listdir(os.path.join(ckpt, STATES))):
-        if not (fn.startswith("state_") and fn.endswith(".json")):
-            continue
-        with open(os.path.join(ckpt, STATES, fn)) as f:
-            rec = json.load(f)
-        states.append(S.state_from_jsonable(rec["state"]))
-        partitions.append((rec["pid"], rec["rows"], rec["secs"]))
-
+    recs = _read_markers(os.path.join(ckpt, STATES))
+    partitions = [(r["pid"], r["rows"], r["secs"]) for r in recs]
     result = InferResult.finalize(
-        merge_states(states), config, sum(p[1] for p in partitions),
-        partitions, t0,
+        merge_states([r["state"] for r in recs]), config,
+        sum(p[1] for p in partitions), partitions, t0,
     )
 
     manifest = {
@@ -350,31 +356,26 @@ def fused_with_checkpoint(
         list(enumerate(tasks)), len(tasks)
     ).map(run).collect()
 
-    states, partials, partitions, lineage = [], [], [], []
-    for fn in sorted(os.listdir(states_dir)):
-        if not (fn.startswith("state_") and fn.endswith(".json")):
-            continue  # orphaned "*.json.tmp.<pid>" from a killed writer
-        with open(os.path.join(states_dir, fn)) as f:
-            rec = json.load(f)
-        states.append(S.state_from_jsonable(rec["state"]))
-        partials.append(_read_partial(integ_dir, rec))
-        partitions.append((rec["pid"], rec["rows"], rec["secs"]))
-        lineage.append(
-            {
-                "pid": rec["pid"],
-                "file": rec["file"],
-                "row_groups": rec["row_groups"],
-                "rows": rec["rows"],
-                "secs": round(rec["secs"], 4),
-                "attempt": rec.get("attempt", 0),
-            }
-        )
+    recs = _read_markers(states_dir)
+    partials = [_read_partial(integ_dir, r) for r in recs]
+    partitions = [(r["pid"], r["rows"], r["secs"]) for r in recs]
+    lineage = [
+        {
+            "pid": r["pid"],
+            "file": r["file"],
+            "row_groups": r["row_groups"],
+            "rows": r["rows"],
+            "secs": round(r["secs"], 4),
+            "attempt": r.get("attempt", 0),
+        }
+        for r in recs
+    ]
 
     result = integ = None
-    if states:
+    if recs:
         result = InferResult.finalize(
-            merge_states(states), config, sum(p[1] for p in partitions),
-            partitions, t0,
+            merge_states([r["state"] for r in recs]), config,
+            sum(p[1] for p in partitions), partitions, t0,
         )
         integ = _merge_partial_blobs(partials)
 

@@ -425,9 +425,13 @@ def observe_arrow_column(
         else:
             mn, mx = float(v.min()), float(v.max())
             if mn == mx:
-                val = mn
+                # latch the first value, not the min: 0.0 == -0.0, and Go
+                # keeps the first one's sign (json.Marshal(-0.0) is "-0")
+                val = float(v[0])
                 tag = "integer" if S.is_go_integral(val) else "number"
-                _latch_const(st, tag, int(val) if tag == "integer" else val)
+                if tag == "integer" and not (val == 0 and math.copysign(1.0, val) < 0):
+                    val = int(val)
+                _latch_const(st, tag, val)
             else:
                 _const_differs(st)
         if st["distinct"] is not None:

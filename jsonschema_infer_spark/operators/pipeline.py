@@ -32,6 +32,10 @@ Results are identical to running `infer_dataframe` over Spark's parquet
 reader and `transcript_integrity_summary` separately — the folds are the
 same code; tests assert equality on clean, violated and shuffled tables.
 
+`run` is the headline infer -> compile -> validate flow built on this
+scan: it predicts the constraint spec, counts violations against it in the
+same pass, and falls back to a validation scan when the prediction misses.
+
 The scan reads the data files with pyarrow, so it sees only the columns
 stored in them. A hive-partitioned table (``key=value`` directories) keeps
 a column in its directory names, which this scan cannot see; every entry
@@ -50,6 +54,7 @@ import functools
 import math
 import os
 import time
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -206,8 +211,8 @@ def infer_and_integrity_parquet(
     MEANINGFUL if the spec matches the schema actually inferred; callers
     must compare the predicted spec against the real one
     (``constraint_spec(res.schema, state=res.state, ...)``) and fall back
-    to the classic violations pass on a mismatch (see bench/pipeline_job
-    for the canonical hit/miss flow).
+    to the classic violations pass on a mismatch; `run` is that hit/miss
+    flow.
 
     ``integrity="background"`` returns a ``Future`` in place of the dict:
     the driver merge of the returned partials — a cost that needs nothing
@@ -333,10 +338,9 @@ class ValidationPrewarm:
     rows) — so this helper, started JUST BEFORE the fused scan, runs on a
     driver thread while executors scan:
 
-      1. fold row-group 0 through the same inference fold (pyarrow, C);
-      2. predict the spec (`validate.constraint_spec`, pure Python);
-      3. build the Column predicates (py4j, off-path);
-      4. execute violation_counts against a ONE-ROW parquet twin of the
+      1. take the spec predicted from row-group 0 (`predict_constraint_spec`);
+      2. build the Column predicates (py4j, off-path);
+      3. execute violation_counts against a ONE-ROW parquet twin of the
          table — same scan schema, same plan shape, so Spark's codegen
          cache is hot for the real run (generated source is identical:
          string literals land in the references array, not the source).
@@ -353,16 +357,13 @@ class ValidationPrewarm:
     starts (`native_parquet_files`).
     """
 
-    def __init__(self, spark, path: str, config: InferConfig | None = None,
-                 enum_max: int = 16, spec: list | None = None):
+    def __init__(self, spark, path: str, spec: list, enum_max: int = 16):
         import threading
 
         self._spark = spark
-        self._path = path
         self._file = native_parquet_files(path)[0]
-        self._config = config or default_config()
         self._enum_max = enum_max
-        self.spec = spec  # precomputed prediction (predict_constraint_spec)
+        self.spec = spec  # the prediction (predict_constraint_spec)
         self.constraints = None
         self.error = None
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -379,10 +380,6 @@ class ValidationPrewarm:
 
         tmp = tempfile.mkdtemp(prefix="jis_prewarm_")
         try:
-            if self.spec is None:
-                self.spec = predict_constraint_spec(
-                    self._path, self._config, self._enum_max
-                )
             pf = pq.ParquetFile(self._file)
             cons = V.build_constraints(self.spec)
             # one-row twin: same arrow schema -> same Spark scan schema ->
@@ -436,3 +433,96 @@ class ValidationPrewarm:
         if self.hit:
             return self.constraints
         return V.build_constraints(real)
+
+
+@dataclass
+class PipelineResult:
+    """What `run` returns. ``violations`` maps constraint name to violating
+    rows under the spec of ``infer``'s schema. ``stage_secs`` splits the
+    wall time: ``infer+integrity`` (prediction and fused scan),
+    ``compile`` (the real spec and its comparison with the prediction),
+    ``violations`` (the validation scan on a miss, ~0 on a hit),
+    ``integrity_wait`` (what the background integrity merge still had
+    left) and ``prewarm_join`` (the prewarm thread after a hit)."""
+
+    infer: InferResult
+    integrity: dict
+    violations: dict
+    spec_hit: bool
+    prewarm_error: BaseException | None
+    stage_secs: dict
+
+
+def run(spark, path: str) -> PipelineResult:
+    """The headline flow, infer -> compile -> validate, over the native
+    parquet table at ``path``, keyed by ``conv_id``/``turn_idx`` under the
+    default config:
+
+    1. predict the constraint spec from row-group 0 and start a
+       `ValidationPrewarm` on it;
+    2. run the fused scan (`infer_and_integrity_parquet`) with the
+       integrity merge in the background, counting violations against
+       the prediction;
+    3. compare the real spec with the prediction. On a hit the scan's
+       counts are the answer; on a miss the prewarm's constraints (or a
+       fresh build) run over `validate.validation_scan`;
+    4. join the integrity future and, on a hit, the prewarm thread, so no
+       Spark job or temp directory outlives the call.
+
+    Tasks cover ``max(1, min(4, n_rg // (cores * 6)))`` row groups each,
+    counted over every data file, so each core gets about six waves of
+    tasks and the last wave cannot strand most of the cluster. A
+    hive-partitioned or empty ``path`` raises ValueError."""
+    import pyarrow.parquet as pq
+
+    from . import validate as V
+
+    n_rg = sum(
+        pq.ParquetFile(f).metadata.num_row_groups
+        for f in native_parquet_files(path)
+    )
+    cores = spark.sparkContext.defaultParallelism
+    rg_per_task = max(1, min(4, n_rg // (cores * 6)))
+    df = spark.read.parquet(path)
+
+    t0 = time.time()
+    pred = predict_constraint_spec(path)
+    pw = ValidationPrewarm(spark, path, spec=pred)
+    res, fut, vcounts = infer_and_integrity_parquet(
+        spark, path, rg_per_task=rg_per_task, integrity="background",
+        violation_spec=pred,
+    )
+    t1 = time.time()
+    real = V.constraint_spec(
+        res.schema, state=res.state, temporal_cols=V.temporal_columns(df)
+    )
+    hit = frozenset(real) == frozenset(pred)
+    t2 = time.time()
+    if hit:
+        counts = vcounts
+    else:
+        cons = pw.constraints_for(res.schema, res.state, df)
+        with V.validation_scan(spark, path) as vdf:
+            counts = {
+                r.constraint: int(r.violation_count)
+                for r in V.violation_counts(vdf, cons).collect()
+            }
+    t3 = time.time()
+    integ = fut.result()
+    t4 = time.time()
+    pw._thread.join()  # already joined by constraints_for on a miss
+    t5 = time.time()
+    return PipelineResult(
+        infer=res,
+        integrity=integ,
+        violations=counts,
+        spec_hit=hit,
+        prewarm_error=pw.error,
+        stage_secs={
+            "infer+integrity": t1 - t0,
+            "compile": t2 - t1,
+            "violations": t3 - t2,
+            "integrity_wait": t4 - t3,
+            "prewarm_join": t5 - t4,
+        },
+    )

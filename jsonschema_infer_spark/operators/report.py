@@ -72,16 +72,16 @@ def run_validation_report(
     verdicts = V.partition_verdicts(
         df, cons, bucket_col=bucket_col, num_buckets=num_buckets
     )
-    verdicts.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "verdicts.parquet")
-    )
+    vpath = os.path.join(out_dir, "verdicts.parquet")
+    verdicts.write.mode("overwrite").parquet(vpath)
 
-    counts = {
-        r.constraint: int(r.violation_count)
-        for r in V.violation_counts(df, cons).collect()
-    }
+    # the totals are the sums over the verdicts sink (at most num_buckets
+    # rows): the same count(when(~pred, 1)) as violation_counts, and
+    # xxhash64 puts every row, null keys included, in some bucket
+    buckets = df.sparkSession.read.schema(verdicts.schema).parquet(vpath).collect()
+    counts = {c.name: sum(b[c.name] for b in buckets) for c in cons}
     metrics = {
-        "rows": df.count() if reference is not None else res.total_rows,
+        "rows": sum(b["rows"] for b in buckets),
         "constraints": counts,
         "violation_total": int(sum(counts.values())),
         "wall_secs": round(time.time() - t0, 3),

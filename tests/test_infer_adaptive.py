@@ -204,6 +204,20 @@ def test_timestamp_render_len_columnar(spark):
     assert st["len_min"] == st["len_max"] == len("2026-01-01T00:00:00.5Z")
 
 
+@pytest.mark.parametrize(
+    "values", [[-0.0], [-0.0, 0.0], [0.0, -0.0], [None, -0.0, -0.0]]
+)
+def test_signed_zero_const(spark, values):
+    """A zero-only double column latches its first value's sign, as Go's
+    first-sample const does: -0.0 renders "-0"."""
+    rows = [(v,) for v in values]
+    df = spark.createDataFrame(rows, "d double")
+    table = pa.Table.from_pylist(
+        [{"d": v} for v in values], schema=pa.schema([("d", pa.float64())])
+    )
+    assert_matches_oracle(df, table)
+
+
 _strings = hst.one_of(
     hst.text(alphabet="ab@. ", min_size=0, max_size=8),
     hst.just("user@example.com"),

@@ -14,7 +14,7 @@ import pytest
 from jsonschema_infer_spark.config import default_config
 from jsonschema_infer_spark.operators import validate as V
 from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
-from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet
+from jsonschema_infer_spark.operators.pipeline import infer_and_integrity_parquet, run
 
 ZERO = {"dup_rows_excess": 0, "ordering_violations": 0}
 
@@ -220,6 +220,22 @@ def test_fused_checkpoint_ignores_orphan_tmp_files(spark, tx_paths, tmp_path):
     assert integ2 == integ1
 
 
+def test_infer_checkpoint_ignores_orphan_tmp_files(spark, tx_paths, tmp_path):
+    """The same torn ``*.json.tmp.<pid>`` marker next to the states of the
+    mapInArrow checkpoint is neither merged nor read."""
+    from jsonschema_infer_spark.checkpoint import infer_with_checkpoint
+
+    df = spark.read.parquet(tx_paths["viol"])
+    ckpt = str(tmp_path / "tmpfile_ckpt")
+    res1, man1 = infer_with_checkpoint(df, ckpt)
+    with open(os.path.join(ckpt, "states", "state_000000.json.tmp.999"), "w") as f:
+        f.write('{"truncat')
+    res2, man2 = infer_with_checkpoint(df, ckpt)
+    assert res2.total_rows == res1.total_rows
+    assert res2.schema_json == res1.schema_json
+    assert man2["completed_partitions"] == man1["completed_partitions"]
+
+
 def test_fused_checkpoint_reads_partials_of_marked_tasks_only(
     spark, tx_paths, tmp_path
 ):
@@ -288,6 +304,7 @@ def test_empty_input_directory_raises(spark, tmp_path):
     calls = (
         lambda: predict_constraint_spec(str(empty)),
         lambda: infer_and_integrity_parquet(spark, str(empty)),
+        lambda: run(spark, str(empty)),
         lambda: fused_with_checkpoint(spark, str(empty), str(tmp_path / "ck")),
     )
     for call in calls:
@@ -359,6 +376,7 @@ def test_native_scan_refuses_hive_partitions(spark, tmp_path):
         lambda: fused_with_checkpoint(spark, root, str(tmp_path / "ck")),
         lambda: predict_constraint_spec(root),
         lambda: ValidationPrewarm(spark, root, spec=[]),
+        lambda: run(spark, root),
     )
     for call in calls:
         with pytest.raises(ValueError, match="partitioned on column 'day'"):
@@ -376,8 +394,8 @@ def test_native_scan_refuses_hive_partitions(spark, tmp_path):
 
 
 def test_validation_prewarm_hit_and_miss(spark, tx_paths):
-    """ValidationPrewarm predicts the constraint spec from row-group 0:
-    on the fixture (one row group) the prediction is exact -> the
+    """ValidationPrewarm warms the spec predicted from row-group 0: on
+    the fixture (one row group) the prediction is exact -> the
     pre-built, codegen-warmed constraints are returned verbatim; with a
     mismatched schema the fallback builds fresh. Both paths produce the
     same counts as compile_constraints."""
@@ -385,12 +403,13 @@ def test_validation_prewarm_hit_and_miss(spark, tx_paths):
     from jsonschema_infer_spark.operators.pipeline import (
         ValidationPrewarm,
         infer_and_integrity_parquet,
+        predict_constraint_spec,
     )
 
     path = tx_paths["viol"]
     df = spark.read.parquet(path)
 
-    pw = ValidationPrewarm(spark, path)
+    pw = ValidationPrewarm(spark, path, spec=predict_constraint_spec(path))
     res, _ = infer_and_integrity_parquet(spark, path)
     cons = pw.constraints_for(res.schema, res.state, df)
     assert pw.error is None
@@ -409,7 +428,7 @@ def test_validation_prewarm_hit_and_miss(spark, tx_paths):
     assert got == want
 
     # miss: a schema whose spec can't match the sampled one
-    pw2 = ValidationPrewarm(spark, path)
+    pw2 = ValidationPrewarm(spark, path, spec=predict_constraint_spec(path))
     other = {
         "type": "object",
         "properties": {"conv_id": {"type": "string"}},
@@ -449,6 +468,61 @@ def _spark_truth(spark, path, spec):
         r.constraint: r.violation_count
         for r in V.violation_counts(df, cons).collect()
     }
+
+
+STAGES = {
+    "infer+integrity", "compile", "violations", "integrity_wait", "prewarm_join",
+}
+
+
+def _assert_run_matches_operators(spark, path, r):
+    """`run`'s schema, integrity and violation counts equal the standalone
+    operators over Spark's reader: infer_dataframe, the shuffle integrity
+    summary, and violation_counts under the inferred schema's spec."""
+    df = spark.read.parquet(path)
+    ref = infer_dataframe(df)
+    assert r.infer.schema_json == ref.schema_json
+    assert r.infer.total_rows == ref.total_rows
+    assert r.integrity == V.transcript_integrity_summary(df)
+    spec = V.constraint_spec(
+        ref.schema, state=ref.state, temporal_cols=V.temporal_columns(df)
+    )
+    assert r.violations == _spark_truth(spark, path, spec)
+    assert set(r.stage_secs) == STAGES
+    assert all(v >= 0 for v in r.stage_secs.values())
+    assert r.prewarm_error is None
+
+
+@pytest.mark.parametrize(
+    "table,hit", [("clean", True), ("viol", True), ("shuffled", False)]
+)
+def test_run_matches_operators(spark, tables, table, hit):
+    """The one-row-group fixtures predict their own spec; row-group 0 of
+    the shuffled copy holds no ``robot`` role and no null ``text``, so its
+    prediction misses and the validation scan gives the counts."""
+    r = run(spark, tables[table])
+    assert r.spec_hit is hit
+    _assert_run_matches_operators(spark, tables[table], r)
+
+
+def test_run_spec_miss_on_two_files(spark, tx_paths, tmp_path):
+    """Clean rows in the first file, violated rows in the second: row-group
+    0 predicts ``required:role`` and the whole table has null roles, so the
+    prediction misses and the validation scan gives the counts."""
+    import shutil
+
+    from jsonschema_infer_spark.operators.pipeline import predict_constraint_spec
+
+    d = tmp_path / "two"
+    d.mkdir()
+    shutil.copy(tx_paths["clean"], d / "a_clean.parquet")
+    shutil.copy(tx_paths["viol"], d / "b_viol.parquet")
+    path = str(d)
+    assert ("required", "role") in predict_constraint_spec(path)
+    r = run(spark, path)
+    assert r.spec_hit is False
+    assert "required:role" not in r.violations
+    _assert_run_matches_operators(spark, path, r)
 
 
 def test_fused_violation_counts_match_spark(spark, tx_paths):

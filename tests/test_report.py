@@ -3,7 +3,24 @@
 import json
 import os
 
+from jsonschema_infer_spark.operators import validate as V
+from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
 from jsonschema_infer_spark.operators.report import run_validation_report
+
+
+def assert_totals_match(spark, df, res, out, metrics):
+    """The metrics' per-constraint totals and row count equal an
+    independent violation_counts pass and df.count(), and both equal the
+    sums over the verdicts sink."""
+    cons = V.compile_constraints(res.schema, state=res.state, df=df)
+    want = {
+        r.constraint: r.violation_count
+        for r in V.violation_counts(df, cons).collect()
+    }
+    buckets = spark.read.parquet(os.path.join(out, "verdicts.parquet")).collect()
+    sums = {name: sum(b[name] for b in buckets) for name in want}
+    assert metrics["constraints"] == want == sums
+    assert metrics["rows"] == df.count() == sum(b["rows"] for b in buckets)
 
 
 def test_report_sinks(spark, tx_paths, tmp_path):
@@ -20,7 +37,7 @@ def test_report_sinks(spark, tx_paths, tmp_path):
     with open(os.path.join(out, "metrics.json")) as f:
         on_disk = json.load(f)
     assert on_disk == metrics
-    assert metrics["rows"] == viol.count()
+    assert_totals_match(spark, viol, infer_dataframe(viol), out, metrics)
     assert metrics["integrity"]["ordering_violations"] > 0
 
     vdf = spark.read.parquet(os.path.join(out, "violations.parquet"))
@@ -38,8 +55,6 @@ def test_report_against_reference_schema(spark, tx_paths, tmp_path):
     """Validating the violated table against the CLEAN snapshot's schema
     surfaces the injected required/enum violations instead of absorbing
     them into a freshly inferred (looser) schema."""
-    from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
-
     clean = spark.read.parquet(tx_paths["clean"])
     viol = spark.read.parquet(tx_paths["viol"])
     ref = infer_dataframe(clean, num_partitions=4)
@@ -48,12 +63,10 @@ def test_report_against_reference_schema(spark, tx_paths, tmp_path):
     log = tx_paths["log"]
     assert metrics["constraints"]["required:role"] == len(log["null_role_rows"])
     assert metrics["constraints"]["enum:role"] == len(log["bad_role_rows"])
-    assert metrics["rows"] == viol.count()
+    assert_totals_match(spark, viol, ref, out, metrics)
 
 
 def test_report_schema_drift_and_fk_checks(spark, tx_paths, tmp_path):
-    from jsonschema_infer_spark.operators.infer_spark import infer_dataframe
-
     viol = spark.read.parquet(tx_paths["viol"])
     ref = infer_dataframe(viol.limit(200))
     out = str(tmp_path / "report_full")
